@@ -362,6 +362,11 @@ def integrity_violations(
                     dfmt = p[1].decode()
                     dw, dh = int(p[2]), int(p[3])
                     seed, amp = int(p[4]), int(p[5])
+                    # untrusted header: only 0 <= amp <= 127 keeps the
+                    # noise span 2*amp+1 inside uint8, where the C kernel
+                    # and the numpy path agree
+                    if not 0 <= amp <= 127:
+                        raise ValueError(f"noise amp {amp} outside [0, 127]")
                 except Exception as e:  # noqa: BLE001
                     out.append(
                         (int(parts[i]), iid, "bytes",

@@ -16,7 +16,11 @@ table's partition spec."""
 
 from __future__ import annotations
 
+import os
+from functools import reduce
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -31,18 +35,6 @@ from ..operators.matcher import match_captions
 from ..operators.matcher_arrow import match_captions_arrow
 from ..schema import VIOLATION_SCHEMA
 from ..sources.synth import expected_caption, logical_partition
-
-DEFAULT_CHECKS = (
-    "schema",
-    "unique_image_id",
-    "unique_phash",
-    "referential",
-    "drift_w",
-    "drift_h",
-    "drift_fmt",
-    "integrity",
-    "sanctioned",
-)
 
 # opt-in (not in DEFAULT_CHECKS, so the sink oracle's expected rollup
 # stays stable): PSI on the format mix — the band-based alternative to
@@ -65,24 +57,20 @@ CAPTION_KEY_RE = r" in (\p{L}+)$"
 AUTO_ARROW_DIM_MAX_ENTRIES = 500_000
 
 
-def resolve_match_strategy(
-    n_dim_entries: int, n_rows: int | None = None
-) -> str:
+def resolve_match_strategy(n_dim_entries: int) -> str:
     """The SCALING.md crossover rule (round-5 measured), as code.
 
     Arrow won EVERY measured cell of the (rows × dimension) grid —
     600 k and 2.4 M rows, 212-alias and 15,664-entry dimensions,
     standalone and inside the concurrent suite — and the native path's
     candidate-aggregation state grows superlinearly with row count at
-    full dimension (65-94 s vs Arrow's 9-12.5 s at 2.4 M), so MORE
-    rows reinforce, never flip, the choice. The one axis that flips
-    it is dimension size: beyond the worker-local index memory budget
-    the Arrow screen's broadcast dict no longer fits, and the native
-    path — whose token index is a relational join Catalyst can
-    degrade from broadcast to shuffle — is the only shape that
-    survives. ``n_rows`` is accepted (and recorded by callers) so the
-    rule's signature matches the grid it was measured on."""
-    del n_rows  # measured: row count never flips the choice
+    full dimension (65-94 s vs Arrow's 9-12.5 s at 2.4 M), so rows
+    never flip the choice and the rule takes no row count. Dimension
+    size does: beyond the budget the rule picks the native path. That
+    path also collects the whole dimension to the driver
+    (``_collect_caption_index``) and joins the token index built there
+    under an ``F.broadcast`` hint, so the index is held once per
+    executor JVM instead of once per Python worker."""
     if n_dim_entries > AUTO_ARROW_DIM_MAX_ENTRIES:
         return "native"
     return "arrow"
@@ -102,6 +90,80 @@ class ValidationReport:
     drift_results: dict[str, DataFrame] = field(default_factory=dict)
 
 
+@dataclass
+class _Run:
+    """What a check's build reads: the run's inputs and the shared cube."""
+
+    images: DataFrame
+    part: Column
+    entries: DataFrame | None
+    ref_keys: DataFrame | None
+    match_strategy: str
+    pixel_sample: int | None
+    cube: Callable[[], DataFrame]
+    drift_results: dict[str, DataFrame]
+
+
+def _sanctioned(r: _Run) -> DataFrame | None:
+    if r.entries is None:
+        return None
+    strategy = r.match_strategy
+    if strategy == "auto":
+        # one count() job on the (small) dimension table; the rule itself
+        # is kept pure and pytest-pinned at both dimension scales
+        strategy = resolve_match_strategy(r.entries.count())
+    matcher = match_captions_arrow if strategy == "arrow" else match_captions
+    # a sanctioned caption is a violation row (the reference's {matched: 1}
+    # verdict as a constraint failure); the logical partition derives from
+    # image_id alone, so no join back to the table is needed
+    return matcher(r.images, r.entries).select(
+        F.lit("sanctioned").alias("check"),
+        r.part.cast("int").alias("partition_id"),
+        F.col("image_id").cast("string"),
+        F.lit("caption").alias("column"),
+        F.concat(F.lit("matched "), F.col("matched_name"),
+                 F.lit(" on "), F.col("list")).alias("detail"),
+    ).to(VIOLATION_SCHEMA)
+
+
+def _drift(col: str, kind: str) -> Callable[[_Run], DataFrame]:
+    """A drift check over the histogram of ``col`` read off the cube."""
+
+    def build(r: _Run) -> DataFrame:
+        hist = r.cube().filter(F.col(col).isNotNull()).groupBy(
+            "partition_id", F.col(col).alias("value")).agg(F.sum("n").alias("n"))
+        res = drift_from_hist(hist, col, kind=kind)
+        r.drift_results[col if kind != "psi" else f"{col}_psi"] = res
+        return drift_violations(res)
+
+    return build
+
+
+# The check registry, in build order: build(run) returns the check's
+# violation rows, or None when an input it needs was not given. Builds
+# look check functions up as module globals at call time, so a patched
+# or span-wrapped runner.<fn> is the one that runs. Drift comes LAST:
+# only it needs the materialized cube, so every other plan is built
+# while the cube job runs.
+CHECKS: tuple[tuple[str, Callable[[_Run], DataFrame | None]], ...] = (
+    ("schema", lambda r: schema_violations(r.images, r.part)),
+    ("unique_image_id", lambda r: uniqueness_violations(
+        r.images, "image_id", partition_expr=r.part)),
+    ("unique_phash", lambda r: uniqueness_violations(
+        r.images, "phash", partition_expr=r.part)),
+    ("referential", lambda r: None if r.ref_keys is None else referential_violations(
+        r.images, caption_key_expr(), r.ref_keys, partition_expr=r.part)),
+    ("integrity", lambda r: integrity_violations(
+        r.images, r.part, expected_caption("image_id"), pixel_sample=r.pixel_sample)),
+    ("sanctioned", _sanctioned),
+    ("drift_w", _drift("w", "ks")),
+    ("drift_h", _drift("h", "ks")),
+    ("drift_fmt", _drift("fmt", "chi2")),
+    (PSI_CHECK, _drift("fmt", "psi")),
+)
+DEFAULT_CHECKS = tuple(name for name, _ in CHECKS if name != PSI_CHECK)
+
+
 def run_validation(
     images: DataFrame,
     entries: DataFrame | None = None,
@@ -109,279 +171,113 @@ def run_validation(
     checks: tuple[str, ...] = DEFAULT_CHECKS,
     partition_expr: Column | None = None,
     match_strategy: str = "auto",
-    expected_caption_expr: Column | None = None,
     with_stats: bool = True,
     pixel_sample: int | None = None,
-    concurrent: bool = True,
     sink_dir: str | None = None,
 ) -> ValidationReport:
-    """Run the registered checks and roll violations into per-partition
-    verdicts.
+    """Run the registered checks; roll violations into per-partition verdicts.
 
-    ``sink_dir``: when set, the violation rows are WRITTEN to
-    ``{sink_dir}/violations.parquet`` (the rollups to
-    ``partition_verdicts.parquet`` / ``check_summary.parquet``, and —
-    when ``with_stats`` — the per-column metrics to ``stats.parquet``)
-    and the returned report's DataFrames read back from those tables —
-    the production shape at 10^12 rows, where verdict/violation/metric
-    artifacts land in tables, not the driver. Default (None) keeps the
-    collect-friendly localCheckpoint-backed report.
+    ``sink_dir``: when set, the violation rows, the two rollups and —
+    when ``with_stats`` — the per-column metrics are WRITTEN to
+    ``{sink_dir}/{violations,partition_verdicts,check_summary,stats}
+    .parquet`` and the report's DataFrames read back from those tables
+    — the production shape at 10^12 rows, where artifacts land in
+    tables, not the driver. Default (None) keeps the collect-friendly
+    localCheckpoint-backed report.
 
     ``match_strategy``: ``"auto"`` (default) applies the measured
-    SCALING.md crossover rule via :func:`resolve_match_strategy` —
-    the Arrow screen whenever the dimension fits the worker-local
-    index budget (it won every measured (rows × dim) cell), the
-    native relational path beyond it (the only shape whose token-index
-    join Catalyst can degrade from broadcast to shuffle when the
-    dimension outgrows broadcast). Explicit ``"arrow"`` / ``"native"``
-    override the rule — e.g. native when Python worker slots are the
-    scarce resource or when the verdicts feed further JVM-side
-    relational logic without an Arrow hop; the two paths are
+    SCALING.md crossover rule, :func:`resolve_match_strategy`: the
+    Arrow screen while the dimension fits the worker-local index
+    budget, the native relational path beyond it (which also collects
+    the dimension to the driver, then broadcast-joins its token index).
+    Explicit ``"arrow"`` / ``"native"`` override the rule — e.g. native
+    when Python worker slots are the scarce resource; the two paths are
     output-identical by pinned contract.
 
-    ``concurrent`` (default): each check materializes as its OWN Spark
-    job from a driver thread pool (eager localCheckpoint), then the
-    union reads the checkpointed blocks. A single union-of-9-branches
-    job executes its AQE query stages largely sequentially, so suite
-    wall time degenerates to the SUM of branch latencies; concurrent
-    jobs share the task slots and bring it down to ~max(branch). Same
-    results by construction — only job boundaries change."""
+    The cube, each check, the stats and each sink table materialize as
+    their OWN Spark job from one driver thread pool, each in a FAIR
+    scheduler pool named after it. A single union-of-9-branches job runs
+    its AQE query stages largely sequentially (suite wall = SUM of
+    branch latencies); concurrent jobs bring it down to ~max(branch)."""
     part = partition_expr if partition_expr is not None else logical_partition("image_id")
-    exp_cap = (
-        expected_caption_expr
-        if expected_caption_expr is not None
-        else expected_caption("image_id")
-    )
     spark = images.sparkSession
+    ex = ThreadPoolExecutor(max_workers=len(CHECKS) + 2)  # + cube + stats
 
-    pieces: list[DataFrame] = []
-    piece_names: list[str] = []
-    drift_results: dict[str, DataFrame] = {}
+    def _materialize(name: str, action: Callable[[], object]) -> Future:
+        def in_pool():
+            # FAIR mode shares slots BETWEEN pools, chosen by this thread-local
+            # property; in the one FIFO "default" pool the light checks would
+            # queue behind the long mapInPandas stages. Pools are auto-created.
+            spark.sparkContext.setLocalProperty("spark.scheduler.pool", name)
+            return action()
 
-    def _add(name: str, df: DataFrame) -> None:
-        piece_names.append(name)
-        pieces.append(df)
+        return ex.submit(in_pool)
 
-    # ONE scan builds the (partition, w, h, fmt) data cube; the three
-    # drift histograms AND the per-partition row counts all derive from
-    # it without touching the table again (w/h/fmt are low-cardinality,
-    # so the cube is tiny: |parts| × |w| × |h| × |fmt| rows). Eager
-    # localCheckpoint, not .cache(): a cache entry would outlive the
-    # report in the session CacheManager (repeated run_validation calls
-    # leak), while checkpoint blocks are reclaimed when the report's
-    # plans are garbage-collected — and every consumer needs the cube
-    # materialized anyway.
-    import os as _os
-    import sys as _sys
-    import time as _time
-    from concurrent.futures import ThreadPoolExecutor as _TPE
+    def _checkpoint(name: str, df: DataFrame) -> Future:
+        return _materialize(name, lambda: df.localCheckpoint(eager=True))
 
-    _timing = _os.environ.get("PDVS_RUNNER_TIMING") == "1"
-    _t0 = _time.time()
-    _cube_plan = images.groupBy(
-        part.cast("int").alias("partition_id"), "w", "h", "fmt"
-    ).agg(F.count(F.lit(1)).alias("n"))
-    # materialize the cube in a background thread so its scan job
-    # overlaps the (driver-side) plan construction of the non-drift
-    # checks below; the future is joined before anything consumes it.
-    # The executor is shut down in the finally below — an exception
-    # while building checks must not leak the thread / background job.
-    def _in_pool(name: str, fn):
-        # spark.scheduler.mode=FAIR schedules fairly BETWEEN pools, and
-        # the pool is chosen by a thread-local property — without this,
-        # every job lands in the single "default" pool whose internal
-        # order is FIFO and FAIR mode changes nothing (ADVICE r4).
-        # Pools are auto-created on first use; no allocation file needed.
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", name)
-        return fn()
+    def _sink(name: str, df: DataFrame) -> Future:
+        path = os.path.join(sink_dir, f"{name}.parquet")
+        return _materialize(name, lambda: df.write.mode("overwrite").parquet(path))
 
-    _cube_ex = _TPE(max_workers=1)
-    _cube_fut = _cube_ex.submit(
-        _in_pool, "cube", lambda: _cube_plan.localCheckpoint(eager=True)
-    )
     try:
+        # ONE scan builds the tiny (partition, w, h, fmt) data cube; the
+        # drift histograms AND the per-partition row counts derive from
+        # it. localCheckpoint, not .cache(): a cache entry would outlive
+        # the report in the session CacheManager (repeated calls leak),
+        # checkpoint blocks die with the report's plans. Submitted first
+        # so its scan overlaps the driver-side plan construction below.
+        cube = _checkpoint("cube", images.groupBy(
+            part.cast("int").alias("partition_id"), "w", "h", "fmt"
+        ).agg(F.count(F.lit(1)).alias("n")))
+        run = _Run(images, part, entries, ref_keys, match_strategy,
+                   pixel_sample, cube.result, {})
 
-        def _cube() -> DataFrame:
-            out = _cube_fut.result()
-            if _timing and not getattr(_cube_fut, "_pdvs_logged", False):
-                _cube_fut._pdvs_logged = True
-                print(f"[runner] cube            {_time.time() - _t0:7.2f}s",
-                      file=_sys.stderr)
-            return out
+        # each check's job is submitted as soon as its plan is built. The
+        # tiny cube-derived drift branches fuse into ONE job (separate jobs
+        # each paid driver latency); `check` still tells them apart.
+        jobs: list[Future] = []
+        drift: list[DataFrame] = []
+        for name, build in CHECKS:
+            df = build(run) if name in checks else None
+            if df is not None and name.startswith("drift_"):
+                drift.append(df)
+            elif df is not None:
+                jobs.append(_checkpoint(name, df))
+        if drift:
+            jobs.append(_checkpoint("drift(fused)", reduce(DataFrame.unionByName, drift)))
+        # the one-pass column stats are an independent scan the caller will
+        # collect anyway: its job overlaps the checks instead of following
+        stats_job = _checkpoint("stats", column_stats(images)) if with_stats else None
+        pieces = [j.result() for j in jobs]
+        stats_df = stats_job.result() if stats_job is not None else None
 
-        if "schema" in checks:
-            _add("schema", schema_violations(images, part))
-        if "unique_image_id" in checks:
-            _add(
-                "unique_image_id",
-                uniqueness_violations(images, "image_id", partition_expr=part),
-            )
-        if "unique_phash" in checks:
-            _add(
-                "unique_phash",
-                uniqueness_violations(images, "phash", partition_expr=part),
-            )
-        if "referential" in checks and ref_keys is not None:
-            _add(
-                "referential",
-                referential_violations(
-                    images, caption_key_expr(), ref_keys, partition_expr=part
-                ),
-            )
-        if "integrity" in checks:
-            _add(
-                "integrity",
-                integrity_violations(
-                    images, part, exp_cap, pixel_sample=pixel_sample
-                ),
-            )
-        if "sanctioned" in checks and entries is not None:
-            strategy = match_strategy
-            if strategy == "auto":
-                # one count() job on the (small) dimension table; the
-                # rule itself is resolve_match_strategy — kept pure and
-                # pytest-pinned at both dimension scales
-                strategy = resolve_match_strategy(entries.count())
-            matcher = (
-                match_captions_arrow if strategy == "arrow" else match_captions
-            )
-            matches = matcher(images, entries)
-            # a sanctioned caption is a violation row (the reference's
-            # {matched: 1} verdict, re-framed as a constraint failure);
-            # the logical partition derives from image_id alone, so no
-            # join back to the table is needed
-            _add(
-                "sanctioned",
-                matches.select(
-                    F.lit("sanctioned").alias("check"),
-                    part.cast("int").alias("partition_id"),
-                    F.col("image_id").cast("string"),
-                    F.lit("caption").alias("column"),
-                    F.concat(
-                        F.lit("matched "), F.col("matched_name"),
-                        F.lit(" on "), F.col("list"),
-                    ).alias("detail"),
-                )
-                .to(VIOLATION_SCHEMA)
-            )
-
-        # drift branches come LAST: they are the only plans that need the
-        # materialized cube, so building every other check's plan first
-        # maximizes the overlap with the cube job running in _cube_ex. The
-        # three branches are tiny (cube-derived histograms) and fuse into
-        # ONE piece/job — three separate jobs each paid driver latency; the
-        # `check` column still distinguishes drift_w/h/fmt in the rollup.
-        drift_pieces: list[DataFrame] = []
-        for col, kind, name in (
-            ("w", "ks", "drift_w"),
-            ("h", "ks", "drift_h"),
-            ("fmt", "chi2", "drift_fmt"),
-            ("fmt", "psi", PSI_CHECK),
-        ):
-            if name in checks:
-                hist = (
-                    _cube().filter(F.col(col).isNotNull())
-                    .groupBy("partition_id", F.col(col).alias("value"))
-                    .agg(F.sum("n").alias("n"))
-                )
-                res = drift_from_hist(hist, col, kind=kind)
-                drift_results[col if kind != "psi" else f"{col}_psi"] = res
-                drift_pieces.append(drift_violations(res))
-        if drift_pieces:
-            fused = drift_pieces[0]
-            for p in drift_pieces[1:]:
-                fused = fused.unionByName(p)
-            _add("drift(fused)", fused)
-
-        if concurrent and len(pieces) > 1:
-            import os
-            import sys
-            import time
-            from concurrent.futures import ThreadPoolExecutor
-
-            timing = os.environ.get("PDVS_RUNNER_TIMING") == "1"
-            # (the shared cube is already materialized — the _cube() future
-            # is joined by the drift branches before the pool starts —
-            # so concurrent drift branches can't race to compute it)
-
-            def _mat(arg: tuple[str, DataFrame]) -> DataFrame:
-                name, df = arg
-                t = time.time()
-                # one scheduler pool per check: FAIR mode shares slots
-                # between POOLS, so the light checks' small stages
-                # interleave with the long mapInPandas stages instead of
-                # queuing behind them in the one FIFO default pool
-                out = _in_pool(name, lambda: df.localCheckpoint(eager=True))
-                if timing:
-                    print(f"[runner] {name:16s} {time.time() - t:7.2f}s",
-                          file=sys.stderr)
-                return out
-
-            # PDVS_RUNNER_POOL caps how many checks materialize at once
-            # (default: all). Fewer concurrent jobs = less task-set
-            # interleaving between bandwidth-heavy (integrity) and cache-
-            # sensitive (join/agg) stages on one shared memory bus.
-            pool = int(os.environ.get("PDVS_RUNNER_POOL", "0")) or len(pieces)
-            # the one-pass column stats ride the same pool: it's an
-            # independent scan the caller will collect anyway, so its job
-            # overlaps the check jobs instead of running serially after them
-            jobs = list(zip(piece_names, pieces))
-            if with_stats:
-                jobs.append(("stats", column_stats(images)))
-            _tp = time.time()
-            with ThreadPoolExecutor(max_workers=pool + (1 if with_stats else 0)) as ex:
-                results = list(ex.map(_mat, jobs))
-            if timing:
-                print(f"[runner] pool_total      {time.time() - _tp:7.2f}s",
-                      file=sys.stderr)
-            stats_df = results.pop() if with_stats else None
-            pieces = results
-        else:
-            stats_df = column_stats(images) if with_stats else None
-        _tu = _time.time()
         if pieces:
-            violations = pieces[0]
-            for p in pieces[1:]:
-                violations = violations.unionByName(p)
-            # the union of ~10 checkpointed pieces carries the SUM of
-            # their partition counts (~300 at 32 cores) — every
-            # downstream consumer (two rollups + the caller's reads,
-            # or the sink write) would launch that many near-empty
-            # tasks, and the sink would land that many tiny files.
-            # A narrow coalesce to the session's parallelism bounds
-            # task count and output file count without a shuffle
-            # (violation rows are a tiny fraction of the input by
-            # construction; ordering is irrelevant to the rollups).
-            # (coalesce to a LARGER count is a no-op, so this never
-            # reduces parallelism below the session's)
-            violations = violations.coalesce(
-                spark.sparkContext.defaultParallelism
-            )
+            # the union of ~10 checkpointed pieces carries the SUM of their
+            # partition counts (~300 at 32 cores): every consumer would
+            # launch that many near-empty tasks and the sink would land that
+            # many tiny files. A narrow coalesce bounds both without a
+            # shuffle (violation rows are few; order is irrelevant). Every
+            # piece is materialized, so it never narrows a check's own scan.
+            violations = reduce(DataFrame.unionByName, pieces).coalesce(
+                spark.sparkContext.defaultParallelism)
         else:
             violations = spark.createDataFrame([], VIOLATION_SCHEMA)
-        if _timing:
-            print(f"[runner] union_built     {_time.time() - _tu:7.2f}s",
-                  file=_sys.stderr)
         if sink_dir is not None:
             # production sink: violations land in a parquet table and every
             # downstream rollup scans the table — no driver-held blocks
-            import os as _os
-
-            viol_path = _os.path.join(sink_dir, "violations.parquet")
-            violations.write.mode("overwrite").parquet(viol_path)
-            violations = spark.read.schema(VIOLATION_SCHEMA).parquet(viol_path)
+            _sink("violations", violations).result()
+            violations = spark.read.schema(VIOLATION_SCHEMA).parquet(
+                os.path.join(sink_dir, "violations.parquet"))
         else:
-            # lazy localCheckpoint (materializes at the first action, reused
-            # by the rollup, summary and caller reads): unlike .cache() the
-            # blocks are reclaimed when the report is garbage-collected, so
-            # a consumer that never calls unpersist() — the CLI, a notebook
-            # loop — cannot leak executor storage across run_validation calls
+            # lazy localCheckpoint, reused by the rollups and caller reads:
+            # unlike .cache() its blocks die with the report, so a consumer
+            # that never calls unpersist() (the CLI, a notebook loop) cannot
+            # leak executor storage across run_validation calls
             violations = violations.localCheckpoint(eager=False)
 
-        _tr = _time.time()
-        rows_per_part = _cube().groupBy("partition_id").agg(
-            F.sum("n").alias("n_rows")
-        )
+        rows_per_part = cube.result().groupBy("partition_id").agg(
+            F.sum("n").alias("n_rows"))
         fails_per_part = violations.groupBy("partition_id").agg(
             F.count(F.lit(1)).alias("n_violations"),
             F.count_distinct(
@@ -400,48 +296,22 @@ def run_validation(
             .agg(F.count(F.lit(1)).alias("n_violations"))
             .orderBy("check")
         )
-        if _timing:
-            print(f"[runner] rollup_built    {_time.time() - _tr:7.2f}s",
-                  file=_sys.stderr)
         if sink_dir is not None:
-            # the two rollups are tiny independent jobs over the already-
-            # written violations table — write them concurrently
-            def _write(arg: tuple[str, DataFrame]) -> None:
-                name, df = arg
-                _in_pool(
-                    name,
-                    lambda: df.write.mode("overwrite").parquet(
-                        _os.path.join(sink_dir, f"{name}.parquet")
-                    ),
-                )
-
-            rollups = [
-                ("partition_verdicts", partition_verdicts),
-                ("check_summary", check_summary),
-            ]
+            # the rollups are tiny independent jobs over the written
+            # violations table: write them concurrently. METRICS sink
+            # alongside verdicts: the stats land as a table too.
+            tables = {"partition_verdicts": partition_verdicts,
+                      "check_summary": check_summary}
             if stats_df is not None:
-                # the north rule sinks METRICS alongside verdicts:
-                # the per-column stats land as a table too, and the
-                # report reads them back like every other artifact
-                rollups.append(("stats", stats_df))
-            with _TPE(max_workers=len(rollups)) as _wex:
-                list(_wex.map(_write, rollups))
-            partition_verdicts = spark.read.parquet(
-                _os.path.join(sink_dir, "partition_verdicts.parquet")
-            ).orderBy("partition_id")
-            check_summary = spark.read.parquet(
-                _os.path.join(sink_dir, "check_summary.parquet")
-            ).orderBy("check")
-            if stats_df is not None:
-                stats_df = spark.read.parquet(
-                    _os.path.join(sink_dir, "stats.parquet")
-                )
+                tables["stats"] = stats_df
+            for w in [_sink(name, df) for name, df in tables.items()]:
+                w.result()
+            read = {name: spark.read.parquet(os.path.join(sink_dir, f"{name}.parquet"))
+                    for name in tables}
+            partition_verdicts = read["partition_verdicts"].orderBy("partition_id")
+            check_summary = read["check_summary"].orderBy("check")
+            stats_df = read.get("stats")
     finally:
-        _cube_ex.shutdown(wait=False)
-    return ValidationReport(
-        violations=violations,
-        partition_verdicts=partition_verdicts,
-        check_summary=check_summary,
-        stats=stats_df,
-        drift_results=drift_results,
-    )
+        ex.shutdown(wait=False, cancel_futures=True)  # a failed build queues no more jobs
+    return ValidationReport(violations, partition_verdicts, check_summary,
+                            stats_df, run.drift_results)

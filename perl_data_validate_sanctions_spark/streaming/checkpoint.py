@@ -24,6 +24,7 @@ from __future__ import annotations
 import time
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -40,7 +41,12 @@ class CheckpointStore:
         """Deduped lineage: latest verified row per (run_id, partition_id)."""
         try:
             raw = spark.read.schema(LINEAGE_SCHEMA).parquet(self._lineage_path)
-        except Exception:  # no checkpoint yet
+        except AnalysisException as e:
+            # only a missing path means "no checkpoint yet"; any other
+            # failure (unknown filesystem, permissions, unmounted store)
+            # must not silently restart the run from nothing
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
             return spark.createDataFrame([], LINEAGE_SCHEMA)
         w = Window.partitionBy("run_id", "partition_id").orderBy(
             F.col("verified").desc()

@@ -192,9 +192,11 @@ def test_integrity_sampled_mode_matches_exact(spark, images):
     assert sorted(map(key, exact)) == sorted(map(key, sampled))
 
 
-def test_integrity_flags_midband_lossy(spark):
+def test_integrity_flags_midband_lossy(spark, monkeypatch):
     """A lossy payload with PSNR in (30, 40) dB decodes fine but must be
-    rejected by the 40 dB gate — and pass a 30 dB gate."""
+    rejected by the 40 dB gate — and pass a 30 dB gate. A noise amp
+    outside [0, 127] is an undecodable header, with the C kernel on and
+    off (the two MSE paths only agree inside that range)."""
     iid = "img-midband-000001"
     seed = codec.ref_seed_py(iid)
     payload = f"PDVS1|jpeg|16|12|{seed}|{codec.MIDBAND_NOISE_AMP}".encode()
@@ -212,6 +214,23 @@ def test_integrity_flags_midband_lossy(spark):
         psnr_threshold=30.0,
     ).collect()
     assert v30 == []
+
+    amps = (-1, 128, 300)
+    bad = [(f"img-badamp-{amp}", bytearray(f"PDVS1|jpeg|16|12|{seed}|{amp}".encode()),
+            16, 12, "jpeg", "a photo", 1) for amp in amps]
+    bad_df = spark.createDataFrame(bad, df.schema)
+
+    def verdicts():
+        return {r["image_id"]: r["detail"] for r in integrity_violations(
+            bad_df, logical_partition("image_id"), F.lit("a photo")).collect()}
+
+    on = verdicts()
+    assert on == {f"img-badamp-{amp}": f"undecodable payload: noise amp {amp} "
+                  "outside [0, 127]" for amp in amps}
+    # Python workers get their environment from the SparkContext, not
+    # from this process's os.environ
+    monkeypatch.setitem(spark.sparkContext.environment, "PDVS_MSE_C", "0")
+    assert verdicts() == on
 
 
 def test_schema_violations_clean_and_dirty(spark, images):

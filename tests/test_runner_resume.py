@@ -193,10 +193,8 @@ def test_resolve_match_strategy_rule():
 
     assert runner.resolve_match_strategy(212) == "arrow"        # bench dim
     assert runner.resolve_match_strategy(15_664) == "arrow"     # bundled dim
-    assert runner.resolve_match_strategy(15_664, n_rows=10**12) == "arrow"
     over = runner.AUTO_ARROW_DIM_MAX_ENTRIES + 1
     assert runner.resolve_match_strategy(over) == "native"
-    assert runner.resolve_match_strategy(over, n_rows=1) == "native"
 
 
 def test_auto_strategy_dispatch(spark, images, ref_dims, monkeypatch):
@@ -261,3 +259,52 @@ def test_runner_psi_opt_in_check(spark, images):
     rollup = {r["check"] for r in report.violations.select("check").distinct().collect()}
     assert rollup <= {"drift_chi2", "drift_psi"}
     assert PSI_CHECK not in DEFAULT_CHECKS  # opt-in by design
+
+
+def test_registry_looks_up_checks_at_call_time(spark, images, ref_dims, monkeypatch):
+    """Every check function the runner binds by name is looked up when
+    the run happens, not captured by the registry at import time — the
+    contract test_auto_strategy_dispatch and span-wrapping callers rely
+    on. A single-check run yields the same rows as the full suite."""
+    from perl_data_validate_sanctions_spark.plans import runner
+
+    entries, ref_keys = ref_dims
+    called: set[str] = set()
+
+    def spy(name):
+        real = getattr(runner, name)
+
+        def wrapped(*a, **k):
+            called.add(name)
+            return real(*a, **k)
+
+        monkeypatch.setattr(runner, name, wrapped)
+
+    names = ("schema_violations", "uniqueness_violations",
+             "referential_violations", "integrity_violations",
+             "column_stats", "drift_from_hist", "drift_violations",
+             "match_captions_arrow")
+    for name in names:
+        spy(name)
+    full = runner.run_validation(images, entries=entries, ref_keys=ref_keys,
+                                 checks=runner.DEFAULT_CHECKS)
+    assert called == set(names)
+
+    def key(r):
+        return (r["partition_id"], r["image_id"], r["column"], r["detail"])
+
+    alone = runner.run_validation(images, checks=("integrity",), with_stats=False)
+    assert {r["check"] for r in alone.violations.collect()} == {"integrity"}
+    want = full.violations.filter(F.col("check") == "integrity").collect()
+    assert want and sorted(map(key, alone.violations.collect())) == sorted(map(key, want))
+
+
+def test_checkpoint_read_fails_loudly(spark, tmp_path):
+    """Only a missing checkpoint path means "nothing done yet"; a store
+    that cannot be read at all (here: an unknown filesystem) raises
+    instead of silently recomputing every partition."""
+    from py4j.protocol import Py4JJavaError
+
+    assert CheckpointStore(str(tmp_path / "none")).completed_partitions(spark, "x") == []
+    with pytest.raises(Py4JJavaError, match="nosuchfs"):
+        CheckpointStore("nosuchfs://bucket/ck").completed_partitions(spark, "x")
