@@ -16,6 +16,14 @@ probe DataFrame — semantics identical to the bulk path by construction
 (one code path). The entries dimension is loaded lazily and cached,
 mirroring the reference's throttled ``_load_data`` (Sanctions.pm:29,
 321-352): reload only when the snapshot path mtime advances.
+
+The screening index is prepared once per loaded snapshot, as the
+reference builds its ``_index`` once per ``_load_data``: the token
+index is materialized (``localCheckpoint``) into a
+:class:`~.operators.matcher.ProbeIndex` the first time a query needs
+it, and rebuilt only when ``_load_data`` returns a different frame
+(mtime advance, ``update_data``). A query then plans one aggregation
+around the prepared Columns and runs against the materialized index.
 """
 
 from __future__ import annotations
@@ -26,7 +34,12 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .operators.matcher import match_probes
+from .operators.matcher import (
+    ProbeIndex,
+    build_name_dim,
+    build_token_index,
+    match_probes,
+)
 from .schema import ENTRY_SCHEMA, PROBE_SCHEMA
 from .sources.synth import synth_entries
 
@@ -46,6 +59,8 @@ class SanctionsValidator:
         self._state: DataFrame | None = None
         self._last_load = 0.0
         self._last_mtime = 0.0
+        self._index: ProbeIndex | None = None
+        self._index_of: DataFrame | None = None
 
     # --- data lifecycle (Sanctions.pm:321-352, 52-90) ---
 
@@ -69,6 +84,23 @@ class SanctionsValidator:
 
     def data(self) -> DataFrame:
         return self._load_data()
+
+    def _probe_index(self) -> ProbeIndex:
+        """The prepared index of the frame ``_load_data`` returns, rebuilt
+        (and the previous one released) only when that frame changes."""
+        entries = self._load_data()
+        if entries is not self._index_of:
+            if self._index is not None:
+                # DataFrame.unpersist() leaves localCheckpoint blocks in
+                # place: they belong to the checkpointed RDD under the
+                # plan, not to the cache manager
+                self._index.table._jdf.queryExecution().logical().rdd().unpersist(
+                    False
+                )
+            table = build_token_index(build_name_dim(entries))
+            self._index = ProbeIndex(table.localCheckpoint(eager=True))
+            self._index_of = entries
+        return self._index
 
     # --- state persistence (the Redis.pm per-source {updated, verified,
     #     error} hashes, kept as a tiny parquet beside the snapshot) ---
@@ -290,7 +322,7 @@ class SanctionsValidator:
             [tuple(fields[f] for f in PROBE_SCHEMA.fieldNames())], PROBE_SCHEMA
         )
         row = (
-            match_probes(probe, self._load_data())
+            match_probes(probe, self._probe_index())
             .select("verdict")
             .collect()[0]["verdict"]
         )

@@ -3,6 +3,7 @@ variants) plus the training-data-pipeline operators (dedup, similarity
 search, text analysis)."""
 
 from .matcher import (  # noqa: F401
+    ProbeIndex,
     build_name_dim,
     build_token_index,
     match_captions,

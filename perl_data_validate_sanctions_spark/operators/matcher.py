@@ -31,11 +31,12 @@ candidates and keep the minimum of (tier, source, name, entry_id) —
 direct-DOB tiers always beat the dob_text fallback tier, matching the
 reference's two-pass structure.
 
-Scale shape: the only shuffle is the final ``groupBy(probe_id)`` over
-candidate-bearing rows — for a 10^12-row caption table where ~2% of
-captions share any token with the dimension, that shuffle carries ~2%
-of rows with a handful of small columns. ``bytes`` is never selected
-on this path (column pruning keeps it out of the scan).
+Scale shape (``match_probes``): the only shuffle is the one
+aggregation per probe row, over the probe rows exploded by token and
+left-joined to the broadcast index — no join back to the probe table.
+``match_captions`` shuffles only candidate-bearing rows; ``bytes`` is
+never selected on either path (column pruning keeps it out of the
+scan).
 """
 
 from __future__ import annotations
@@ -196,86 +197,102 @@ def _miss_verdict() -> Column:
     )
 
 
+class ProbeIndex:
+    """The screening index of one dimension snapshot, prepared once.
+
+    Holds the broadcast-hinted token index and every Column
+    :func:`match_probes` needs — the probe-side prep (tokens, cleaned
+    full name, DOB epoch/year, country codes), the candidate predicates
+    and the ranked verdict struct — so a call only wires a plan around
+    them. The reference likewise builds its ``_index`` once per
+    ``_load_data`` (Sanctions.pm:321-352, 360-382), not per query.
+    ``table`` is the unhinted token index, for the owner to release."""
+
+    def __init__(self, token_index: DataFrame):
+        self.table = token_index
+        self.index = F.broadcast(token_index)
+        full_name = process_name(
+            F.col("first_name"), F.coalesce(F.col("last_name"), F.lit(""))
+        )
+        pepoch = date_to_epoch(F.col("date_of_birth"))
+        self.prep = [
+            clean_name_tokens(full_name).alias("__ptokens"),
+            clean_full_name(full_name).alias("__pfull"),
+            F.col("date_of_birth").isNotNull().alias("__dob_provided"),
+            pepoch.alias("__pepoch"),
+            epoch_year(pepoch).alias("__pyear"),
+        ]
+        # probe-side country normalization (Sanctions.pm:235-240):
+        # unknown countries become '' which the field check then ignores
+        # (falsy in Perl) — NOT a mismatch.
+        for f in OPTIONAL_MATCH_FIELDS:
+            p_f = F.col(f)
+            if f in ("place_of_birth", "residence", "nationality", "citizen"):
+                p_f = F.when(p_f.isNotNull() & (p_f != ""), country_code(p_f))
+            self.prep.append(p_f.alias("__p_" + f))
+
+        preds = _candidate_predicates(
+            F.col("__ptokens"),
+            F.col("__pfull"),
+            F.col("__dob_provided"),
+            F.col("__pepoch"),
+            F.col("__pyear"),
+            {f: F.col("__p_" + f) for f in OPTIONAL_MATCH_FIELDS},
+        )
+        verdict = F.struct(
+            F.lit(1).alias("matched"),
+            _e("source").alias("list"),
+            preds["matched_args"].alias("matched_args"),
+            preds["comment"].alias("comment"),
+        )
+        ranked = F.struct(
+            preds["tier"].alias("tier"),
+            _e("source").alias("source"),
+            _e("name").alias("name"),
+            _e("entry_id").alias("entry_id"),
+            verdict.alias("verdict"),
+        )
+        self.best = F.min(F.when(preds["candidate_ok"], ranked)).alias("__best")
+        self.verdict = F.coalesce(F.col("__best.verdict"), _miss_verdict()).alias(
+            "verdict"
+        )
+
+    @classmethod
+    def of(cls, entries: DataFrame) -> ProbeIndex:
+        return cls(build_token_index(build_name_dim(entries)))
+
+
 def match_probes(
     probes: DataFrame,
-    entries: DataFrame,
-    probe_id_col: str = "probe_id",
+    entries: DataFrame | ProbeIndex,
 ) -> DataFrame:
     """Full ``get_sanctioned_info`` over a probe table: returns the probe
-    table plus a ``verdict`` struct column (VERDICT_SCHEMA)."""
-    token_index = F.broadcast(build_token_index(build_name_dim(entries)))
+    table plus a ``verdict`` struct column (VERDICT_SCHEMA). ``entries``
+    is the entries DataFrame or a :class:`ProbeIndex` prepared from it.
 
-    full_name = process_name(
-        F.col("first_name"), F.coalesce(F.col("last_name"), F.lit(""))
-    )
-    pepoch = date_to_epoch(F.col("date_of_birth"))
-    prepared = (
-        probes.withColumn("__ptokens", clean_name_tokens(full_name))
-        .withColumn("__pfull", clean_full_name(full_name))
-        .withColumn("__dob_provided", F.col("date_of_birth").isNotNull())
-        .withColumn("__pepoch", pepoch)
-        .withColumn("__pyear", epoch_year(pepoch))
-    )
-    # probe-side country normalization (Sanctions.pm:235-240): unknown
-    # countries become '' which the field check then ignores (falsy in
-    # Perl) — NOT a mismatch.
-    probe_fields: dict[str, Column] = {}
-    for f in OPTIONAL_MATCH_FIELDS:
-        if f in ("place_of_birth", "residence", "nationality", "citizen"):
-            prepared = prepared.withColumn(
-                "__p_" + f,
-                F.when(
-                    F.col(f).isNotNull() & (F.col(f) != ""), country_code(F.col(f))
-                ),
-            )
-        else:
-            prepared = prepared.withColumn("__p_" + f, F.col(f))
-        probe_fields[f] = F.col("__p_" + f)
-
-    exploded = prepared.select(
-        F.col(probe_id_col).alias("__pid"),
-        "__ptokens",
-        "__pfull",
-        "__dob_provided",
-        "__pepoch",
-        "__pyear",
-        *["__p_" + f for f in OPTIONAL_MATCH_FIELDS],
-        F.explode("__ptokens").alias("__token"),
-    )
-    joined = exploded.join(token_index, "__token")
-
-    preds = _candidate_predicates(
-        F.col("__ptokens"),
-        F.col("__pfull"),
-        F.col("__dob_provided"),
-        F.col("__pepoch"),
-        F.col("__pyear"),
-        probe_fields,
-    )
-    verdict = F.struct(
-        F.lit(1).alias("matched"),
-        _e("source").alias("list"),
-        preds["matched_args"].alias("matched_args"),
-        preds["comment"].alias("comment"),
-    )
-    ranked = F.struct(
-        preds["tier"].alias("tier"),
-        _e("source").alias("source"),
-        _e("name").alias("name"),
-        _e("entry_id").alias("entry_id"),
-        verdict.alias("verdict"),
+    One verdict per probe ROW, as the reference verdicts per call: each
+    row carries its own key ``__rk`` and the whole row (``__row``)
+    through explode → left broadcast join → one aggregation on
+    ``__rk``, so rows sharing a ``probe_id`` never take each other's
+    verdict and a row with no candidate (or no name token) comes out
+    once, as a miss.
+    CAVEAT (same as :func:`_with_physical_row_key`'s fallback):
+    ``__rk`` is ``monotonically_increasing_id``, which is not stable
+    if a probe-side map task is recomputed after some reducers fetched
+    its output, which can duplicate or drop verdict rows of that task."""
+    idx = entries if isinstance(entries, ProbeIndex) else ProbeIndex.of(entries)
+    prepared = probes.select(
+        F.monotonically_increasing_id().alias("__rk"),
+        F.struct(F.col("*")).alias("__row"),
+        *idx.prep,
     )
     best = (
-        joined.filter(preds["candidate_ok"])
-        .groupBy("__pid")
-        .agg(F.min(ranked).alias("__best"))
+        prepared.withColumn("__token", F.explode_outer("__ptokens"))
+        .join(idx.index, "__token", "left")
+        .groupBy("__rk")
+        .agg(F.first("__row").alias("__row"), idx.best)
     )
-    out = probes.join(
-        best, probes[probe_id_col] == best["__pid"], "left"
-    ).withColumn(
-        "verdict", F.coalesce(F.col("__best.verdict"), _miss_verdict())
-    )
-    return out.drop("__pid", "__best")
+    return best.select("__row.*", idx.verdict)
 
 
 def _with_physical_row_key(
@@ -298,7 +315,8 @@ def _with_physical_row_key(
     output, recomputed rows get different ids (SPARK-23207 class),
     which can duplicate/drop verdict rows for physical duplicates. On
     a cluster, feed file-backed frames; the fallback exists for local
-    ephemeral inputs only.
+    ephemeral inputs only. :func:`match_probes` keys its probe rows the
+    same way (``__rk``) and carries the same caveat.
     """
     cols = [F.col(id_col).alias("__pid"), F.col(caption_col)]
     # inputFiles() pre-filter: in-memory/synthetic frames have no file

@@ -517,6 +517,10 @@ def decode_jpeg_gray(payload: bytes) -> tuple[int, int, np.ndarray]:
     # bit-identical across every pinned fixture payload, 3000
     # bench-style renders and 300 random size/quality images
     # (tests/test_jpeg.py::test_idct_matmul_matches_einsum pins this).
+    # That identity is empirical for the BLAS build it was measured on,
+    # not algebraic: another BLAS may sum in another order, and a value
+    # landing on a .5 rounding boundary could then flip one pixel by ±1.
+    # The pinned test is what catches such a platform.
     spatial = _T.T @ d @ _T + 128.0
     pixels = (
         np.clip(np.round(spatial), 0, 255)

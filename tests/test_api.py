@@ -54,6 +54,55 @@ def test_update_data_and_export(spark, tmp_path_factory):
     assert spark.read.parquet(out).count() == v.data().count()
 
 
+def _cached_rdds(spark) -> set[int]:
+    return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def _index_rdd(v) -> int:
+    return v._index.table._jdf.queryExecution().logical().rdd().id()
+
+
+def test_new_snapshot_invalidates_cached_index(spark, tmp_path_factory):
+    """The prepared screening index belongs to one loaded snapshot: it
+    is reused while the snapshot stands, rebuilt after a reload through
+    the mtime path and after update_data, and the old one is released.
+    A stale index would keep answering from the dropped data."""
+    path = str(tmp_path_factory.mktemp("idx") / "entries.parquet")
+    base = synth_entries(spark, n_extra=0)
+    base.write.parquet(path)
+    v = SanctionsValidator(spark, sanction_path=path)
+    assert v.is_sanctioned("Hamza") == 1  # UNSC-Sanctions persona
+    assert v.is_sanctioned("Quirin", "Zebedee") == 0
+    first = v._index
+    assert v.is_sanctioned("Hamza") == 1
+    assert v._index is first  # same snapshot: no rebuild
+
+    # mtime path: the snapshot is rewritten with UNSC-Sanctions replaced
+    newcomer = spark.createDataFrame(
+        [(10**6, "UNSC-Sanctions", ["Quirin Zebedee"])
+         + (None,) * 10],
+        base.schema,
+    )
+    base.filter(F.col("source") != "UNSC-Sanctions").unionByName(
+        newcomer
+    ).write.mode("overwrite").parquet(path)
+    old_rdd = _index_rdd(v)
+    v._last_load = 0  # force the reload past the throttle
+    assert v.is_sanctioned("Quirin", "Zebedee") == 1
+    assert v.is_sanctioned("Hamza") == 0
+    assert old_rdd not in _cached_rdds(spark)
+
+    # update_data path: the original UNSC-Sanctions entries come back
+    old_rdd = _index_rdd(v)
+    decisions = v.update_data(base.filter(F.col("source") == "UNSC-Sanctions"))
+    assert [r["source"] for r in decisions.collect() if r["take_new"]] == [
+        "UNSC-Sanctions"
+    ]
+    assert v.is_sanctioned("Hamza") == 1
+    assert v.is_sanctioned("Quirin", "Zebedee") == 0
+    assert old_rdd not in _cached_rdds(spark)
+
+
 def test_last_updated_roundtrip_and_source_status(spark, tmp_path_factory):
     """Sanctions.pm:92-102: last_updated is max(updated) across sources
     (or the named source's); the stamped publish epoch must round-trip

@@ -13,6 +13,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from perl_data_validate_sanctions_spark.operators.matcher import (
+    ProbeIndex,
+    build_name_dim,
+    build_token_index,
     match_captions,
     match_probes,
 )
@@ -191,6 +194,65 @@ def test_field_mismatch_matrix(spark):
         }
         expect.pop(f)
         assert _args(v) == expect
+
+
+def _probe_rows(spark, *probes):
+    """A probe table from (probe_id, first_name, last_name) triples."""
+    from perl_data_validate_sanctions_spark.schema import PROBE_SCHEMA
+
+    cols = PROBE_SCHEMA.fieldNames()
+    rows = []
+    for pid, first, last in probes:
+        row = {c: None for c in cols}
+        row.update(probe_id=pid, first_name=first, last_name=last)
+        rows.append(tuple(row[c] for c in cols))
+    return spark.createDataFrame(rows, PROBE_SCHEMA)
+
+
+def test_match_probes_one_verdict_per_row(spark):
+    """The reference verdicts per call, so each probe ROW gets its own
+    verdict: rows sharing a probe_id never take each other's, identical
+    rows both come out, and a row with no name token is one miss."""
+    from collections import Counter
+
+    probes = _probe_rows(
+        spark,
+        ("shared", "Nora", "Quinn"),
+        ("shared", "Bandit", "Outlaw"),
+        ("twin", "Hamza", None),
+        ("twin", "Hamza", None),
+        ("digits", "123", None),
+    )
+    out = match_probes(probes, synth_entries(spark, n_extra=0))
+    got = Counter(
+        (r["probe_id"], r["first_name"], r["verdict"]["matched"], r["verdict"]["list"])
+        for r in out.collect()
+    )
+    assert got == Counter([
+        ("shared", "Nora", 0, None),
+        ("shared", "Bandit", 1, "OFAC-Consolidated"),
+        ("twin", "Hamza", 1, "UNSC-Sanctions"),
+        ("twin", "Hamza", 1, "UNSC-Sanctions"),
+        ("digits", "123", 0, None),
+    ])
+
+
+def test_probe_plan_shape(spark, tmp_path):
+    """Pre-AQE physical plan of one screening against a prepared index:
+    the probe side joins the broadcast index and is aggregated once —
+    no sort-merge join back to the probe table, one hash exchange, and
+    no rescan of the snapshot the index was built from."""
+    path = str(tmp_path / "entries.parquet")
+    synth_entries(spark, n_extra=0).write.parquet(path)
+    table = build_token_index(build_name_dim(spark.read.parquet(path)))
+    index = ProbeIndex(table.localCheckpoint(eager=True))
+    out = match_probes(_probe_rows(spark, ("p", "Bandit", "Outlaw")), index)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" not in plan, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert plan.count("BroadcastExchange") == 1, plan
+    assert "FileScan" not in plan, plan
+    assert out.collect()[0]["verdict"]["list"] == "OFAC-Consolidated"
 
 
 def test_caption_match_native_and_arrow_agree(spark):

@@ -308,3 +308,15 @@ def test_checkpoint_read_fails_loudly(spark, tmp_path):
     assert CheckpointStore(str(tmp_path / "none")).completed_partitions(spark, "x") == []
     with pytest.raises(Py4JJavaError, match="nosuchfs"):
         CheckpointStore("nosuchfs://bucket/ck").completed_partitions(spark, "x")
+
+
+def test_corrupt_lineage_fails_loudly(spark, tmp_path):
+    """A lineage directory that is present but unreadable (a part file
+    that is not parquet) raises; it never reads as "nothing done yet"."""
+    from py4j.protocol import Py4JJavaError
+
+    lineage = tmp_path / "ck" / "lineage"
+    lineage.mkdir(parents=True)
+    (lineage / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Py4JJavaError):
+        CheckpointStore(str(tmp_path / "ck")).completed_partitions(spark, "x")
