@@ -41,6 +41,7 @@ from .operators.matcher import (
     match_probes,
 )
 from .schema import ENTRY_SCHEMA, PROBE_SCHEMA
+from .session import release_checkpoint
 from .sources.synth import synth_entries
 
 IGNORE_OPERATION_INTERVAL = 8 * 60  # Sanctions.pm:29
@@ -91,12 +92,7 @@ class SanctionsValidator:
         entries = self._load_data()
         if entries is not self._index_of:
             if self._index is not None:
-                # DataFrame.unpersist() leaves localCheckpoint blocks in
-                # place: they belong to the checkpointed RDD under the
-                # plan, not to the cache manager
-                self._index.table._jdf.queryExecution().logical().rdd().unpersist(
-                    False
-                )
+                release_checkpoint(self._index.table)
             table = build_token_index(build_name_dim(entries))
             self._index = ProbeIndex(table.localCheckpoint(eager=True))
             self._index_of = entries

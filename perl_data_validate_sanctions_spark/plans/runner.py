@@ -34,6 +34,7 @@ from ..checks.unique import uniqueness_violations
 from ..operators.matcher import match_captions
 from ..operators.matcher_arrow import match_captions_arrow
 from ..schema import VIOLATION_SCHEMA
+from ..session import release_checkpoint
 from ..sources.synth import expected_caption, logical_partition
 
 # opt-in (not in DEFAULT_CHECKS, so the sink oracle's expected rollup
@@ -88,6 +89,15 @@ class ValidationReport:
     check_summary: DataFrame
     stats: DataFrame | None = None
     drift_results: dict[str, DataFrame] = field(default_factory=dict)
+    # every localCheckpoint-backed frame the run made: the cube, each
+    # check's piece, the stats and the violations
+    checkpoints: list[DataFrame] = field(default_factory=list)
+
+    def release(self) -> None:
+        """Free the blocks of every frame the run checkpointed. The
+        report's frames cannot be read afterwards."""
+        for df in self.checkpoints:
+            release_checkpoint(df)
 
 
 @dataclass
@@ -213,8 +223,15 @@ def run_validation(
 
         return ex.submit(in_pool)
 
+    checkpoints: list[DataFrame] = []
+
     def _checkpoint(name: str, df: DataFrame) -> Future:
-        return _materialize(name, lambda: df.localCheckpoint(eager=True))
+        def action() -> DataFrame:
+            cp = df.localCheckpoint(eager=True)
+            checkpoints.append(cp)
+            return cp
+
+        return _materialize(name, action)
 
     def _sink(name: str, df: DataFrame) -> Future:
         path = os.path.join(sink_dir, f"{name}.parquet")
@@ -272,9 +289,10 @@ def run_validation(
         else:
             # lazy localCheckpoint, reused by the rollups and caller reads:
             # unlike .cache() its blocks die with the report, so a consumer
-            # that never calls unpersist() (the CLI, a notebook loop) cannot
+            # that never calls release() (the CLI, a notebook loop) cannot
             # leak executor storage across run_validation calls
             violations = violations.localCheckpoint(eager=False)
+            checkpoints.append(violations)
 
         rows_per_part = cube.result().groupBy("partition_id").agg(
             F.sum("n").alias("n_rows"))
@@ -314,4 +332,4 @@ def run_validation(
     finally:
         ex.shutdown(wait=False, cancel_futures=True)  # a failed build queues no more jobs
     return ValidationReport(violations, partition_verdicts, check_summary,
-                            stats_df, run.drift_results)
+                            stats_df, run.drift_results, checkpoints)

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -26,6 +26,11 @@ def get_spark(
 
     ``cores``: int N -> ``local[N]``; "*" -> all; None -> env
     ``SPARK_GRAFT_CPUS`` or "*".
+
+    The generated-code cache size is a static conf: it holds only for a
+    session this function builds (the CLI, the tests, perfbench).
+    A caller's own session, such as the driver contract's, keeps
+    Spark's default of 100 entries. ``extra_conf`` overrides any default.
     """
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -60,9 +65,28 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("PDVS_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Spark keeps compiled generated code in an LRU of this many
+        # sources (default 100). One default-check suite needs ~190
+        # distinct sources (AQE variants included) and the screening
+        # probe ~24, so at 100 the suite's cyclic scan misses on every
+        # lookup: each run recompiled ~170 sources in Janino and C2
+        # re-JITted the reloaded classes (a 20k-row suite on 4 cores:
+        # ~20 → ~15 CPU-s, 5.3 → 4.0 s per run). 1000 holds the measured
+        # working set ~4.5× over; Metaspace stays ~167 MB either way,
+        # since the thrash only unloaded and reloaded the same classes.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint``-backed frame.
+
+    ``DataFrame.unpersist()`` leaves them in place: they belong to the
+    checkpointed RDD under the plan, not to the cache manager. The
+    frame cannot be read afterwards."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)

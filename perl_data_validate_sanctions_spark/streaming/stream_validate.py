@@ -63,7 +63,7 @@ def validate_stream(
             .write.mode("append")
             .parquet(violations_out)
         )
-        report.violations.unpersist()
+        report.release()
 
     writer = (
         stream.writeStream.foreachBatch(per_batch)

@@ -62,6 +62,26 @@ def test_full_validation_report(spark, images, ref_dims):
     assert report.violations.schema == VIOLATION_SCHEMA
 
 
+def test_release_frees_checkpointed_rdds(spark, images, ref_dims):
+    """release() frees every localCheckpoint the run made, which
+    DataFrame.unpersist() does not."""
+    entries, ref_keys = ref_dims
+    report = run_validation(images, entries=entries, ref_keys=ref_keys)
+    report.check_summary.collect()  # computes the lazy violations checkpoint
+    # cube + 6 check pieces + fused drift + stats + violations
+    assert len(report.checkpoints) == 10
+    ids = {df._jdf.queryExecution().logical().rdd().id() for df in report.checkpoints}
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    assert ids <= persisted()
+    report.violations.unpersist()
+    assert ids <= persisted()
+    report.release()
+    assert not ids & persisted()
+
+
 def test_resume_skips_completed_partitions(spark, images, tmp_path_factory):
     ckpt = str(tmp_path_factory.mktemp("ckpt"))
     store = CheckpointStore(ckpt)
