@@ -13,9 +13,12 @@ shape, Spark underneath.
 
 Single-probe queries run the same distributed cascade on a one-row
 probe DataFrame — semantics identical to the bulk path by construction
-(one code path). The entries dimension is loaded lazily and cached,
-mirroring the reference's throttled ``_load_data`` (Sanctions.pm:29,
-321-352): reload only when the snapshot path mtime advances.
+(one code path). The probe is a local relation
+(:func:`~.session.local_frame`): its row travels in the plan and is
+scanned in one JVM task, with no Python worker started to unpickle it.
+The entries dimension is loaded lazily and cached, mirroring the
+reference's throttled ``_load_data`` (Sanctions.pm:29, 321-352):
+reload only when the snapshot path mtime advances.
 
 The screening index is prepared once per loaded snapshot, as the
 reference builds its ``_index`` once per ``_load_data``: the token
@@ -41,7 +44,7 @@ from .operators.matcher import (
     match_probes,
 )
 from .schema import ENTRY_SCHEMA, PROBE_SCHEMA
-from .session import release_checkpoint
+from .session import local_frame, release_checkpoint
 from .sources.synth import synth_entries
 
 IGNORE_OPERATION_INTERVAL = 8 * 60  # Sanctions.pm:29
@@ -229,7 +232,8 @@ class SanctionsValidator:
         if errors_by_source:
             # an errored feed contributes no entry rows, so its state
             # row must be synthesized for the merge to record the error
-            err_rows = self.spark.createDataFrame(
+            err_rows = local_frame(
+                self.spark,
                 [(s, 0, 0, None, msg) for s, msg in errors_by_source.items()],
                 "source string, updated long, n_entries long, "
                 "content_hash string, error string",
@@ -242,7 +246,7 @@ class SanctionsValidator:
         # materialize driver-side BEFORE the snapshot swap: the decision
         # plan reads the OLD parquet version, which the swap deletes
         rows = decisions.collect()
-        decisions = self.spark.createDataFrame(rows, decisions.schema)
+        decisions = local_frame(self.spark, rows, decisions.schema)
         take = [r["source"] for r in rows if r["take_new"]]
         if take:
             kept = current.filter(~F.col("source").isin(take))
@@ -314,8 +318,10 @@ class SanctionsValidator:
             if k not in fields:
                 raise TypeError(f"unknown argument {k!r}")
             fields[k] = None if v is None else str(v)
-        probe = self.spark.createDataFrame(
-            [tuple(fields[f] for f in PROBE_SCHEMA.fieldNames())], PROBE_SCHEMA
+        probe = local_frame(
+            self.spark,
+            [tuple(fields[f] for f in PROBE_SCHEMA.fieldNames())],
+            PROBE_SCHEMA,
         )
         row = (
             match_probes(probe, self._probe_index())

@@ -78,7 +78,7 @@ def main(argv: list[str] | None = None) -> int:
 
     args = p.parse_args(argv)
 
-    from .session import get_spark
+    from .session import get_spark, local_frame
 
     spark = get_spark(app_name=f"pdvs-{args.cmd}", cores=args.cores)
 
@@ -115,9 +115,9 @@ def main(argv: list[str] | None = None) -> int:
                 return 1
             # a fresh snapshot starts EMPTY (never from the bundled
             # fallback dataset — that's for read paths only)
-            v._entries = spark.createDataFrame([], ENTRY_SCHEMA)
+            v._entries = local_frame(spark, [], ENTRY_SCHEMA)
         if fetched is None:
-            fetched = spark.createDataFrame([], ENTRY_SCHEMA)
+            fetched = local_frame(spark, [], ENTRY_SCHEMA)
         decisions = v.update_data(
             fetched,
             updated_by_source=updated_by_source,
@@ -150,7 +150,7 @@ def main(argv: list[str] | None = None) -> int:
         else:
             p.error("validate needs --input or --synth-rows")
         entries = synth_entries(spark)
-        ref_keys = spark.createDataFrame([(x,) for x in PLACES], "key string")
+        ref_keys = local_frame(spark, [(x,) for x in PLACES], "key string")
 
         if args.checkpoint and args.sink_dir:
             p.error("--sink-dir applies to the plain validate path; "

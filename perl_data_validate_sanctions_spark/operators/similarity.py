@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _per_query_topk(scored: DataFrame, k: int) -> DataFrame:
     """(query_id, vec_id, cosine) → top-k per query WITHOUT a per-query
@@ -364,7 +366,8 @@ def ivf_ann_topk_indexed(
         F.col("ivf_cluster").isin(probe_union)  # pruned at the scan
     )
     q = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 (r["query_id"], [float(x) for x in r["qv"]], b)
                 for r in q_rows

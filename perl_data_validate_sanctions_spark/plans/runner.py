@@ -34,7 +34,7 @@ from ..checks.unique import uniqueness_violations
 from ..operators.matcher import match_captions
 from ..operators.matcher_arrow import match_captions_arrow
 from ..schema import VIOLATION_SCHEMA
-from ..session import release_checkpoint
+from ..session import local_frame, release_checkpoint
 from ..sources.synth import expected_caption, logical_partition
 
 # opt-in (not in DEFAULT_CHECKS, so the sink oracle's expected rollup
@@ -279,7 +279,7 @@ def run_validation(
             violations = reduce(DataFrame.unionByName, pieces).coalesce(
                 spark.sparkContext.defaultParallelism)
         else:
-            violations = spark.createDataFrame([], VIOLATION_SCHEMA)
+            violations = local_frame(spark, [], VIOLATION_SCHEMA)
         if sink_dir is not None:
             # production sink: violations land in a parquet table and every
             # downstream rollup scans the table — no driver-held blocks

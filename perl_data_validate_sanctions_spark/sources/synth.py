@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import ENTRY_SCHEMA, PROBE_SCHEMA
+from ..session import local_frame
 from .codec import LOSSY_NOISE_AMP, MAGIC
 
 # logical partitioning of the keyspace: checks aggregate per
@@ -292,7 +293,7 @@ def synth_entries(spark: SparkSession, n_extra: int = 200) -> DataFrame:
                 None, None, None, None, None, None, None,
             )
         )
-    return spark.createDataFrame(rows, ENTRY_SCHEMA)
+    return local_frame(spark, rows, ENTRY_SCHEMA)
 
 
 def synth_probes(spark: SparkSession) -> DataFrame:
@@ -324,4 +325,4 @@ def synth_probes(spark: SparkSession) -> DataFrame:
         p("majid_epoch0", "Ali Hassan", "Majid", "1970-01-01"),
         p("ewaz_noise", "Mohammad reere yuyuy", "wqwqw  qqqqq"),
     ]
-    return spark.createDataFrame(rows, PROBE_SCHEMA)
+    return local_frame(spark, rows, PROBE_SCHEMA)

@@ -15,6 +15,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schema import ENTRY_SCHEMA
+from ..session import local_frame
 
 _ARRAY_FIELDS = (
     "names", "dob_text", "place_of_birth", "residence", "nationality",
@@ -55,7 +56,7 @@ def load_yaml_dataset(
                 row.append([str(x) for x in v] if v else None)
             rows.append(tuple(row))
             eid += 1
-    return spark.createDataFrame(rows, ENTRY_SCHEMA), meta
+    return local_frame(spark, rows, ENTRY_SCHEMA), meta
 
 
 def save_yaml_dataset(

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import canonical_row_hash, content_hash_agg_scalable
 from ..schema import LINEAGE_SCHEMA
+from ..session import local_frame
 
 
 class CheckpointStore:
@@ -47,7 +48,7 @@ class CheckpointStore:
             # must not silently restart the run from nothing
             if e.getCondition() != "PATH_NOT_FOUND":
                 raise
-            return spark.createDataFrame([], LINEAGE_SCHEMA)
+            return local_frame(spark, [], LINEAGE_SCHEMA)
         w = Window.partitionBy("run_id", "partition_id").orderBy(
             F.col("verified").desc()
         )

@@ -33,6 +33,39 @@ def test_keyword_api_verdict_shape(validator):
     assert validator.get_sanctioned_info("nobody", "anywhere") == {"matched": 0}
 
 
+@pytest.mark.parametrize("arrow", ["true", "false"])
+def test_screening_probe_is_a_local_scan(spark, validator, monkeypatch, arrow):
+    """The one-row probe is scanned from the plan itself (a
+    ``LocalTableScan``), whatever the Arrow conf says: a list-built probe
+    plans as a second ``Scan ExistingRDD`` over a PythonRDD, and every
+    call then starts Python workers to unpickle one row. The only RDD
+    scan left is the checkpointed token index."""
+    from perl_data_validate_sanctions_spark import api
+
+    match_probes, screened = api.match_probes, []
+
+    def spy(*args, **kwargs):
+        screened.append(match_probes(*args, **kwargs))
+        return screened[-1]
+
+    monkeypatch.setattr(api, "match_probes", spy)
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, arrow)
+    try:
+        assert validator.get_sanctioned_info("Zaki", "Ahmad", "1999-01-05")[
+            "matched"] == 1
+        (frame,) = screened
+        frame.collect()
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(conf, before)
+    final = plan.split("== Initial Plan ==")[0]
+    assert "== Final Plan ==" in final, plan
+    assert "LocalTableScan" in final, final
+    assert final.count("Scan ExistingRDD") == 1, final
+
+
 def test_update_data_and_export(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("snap") / "entries.parquet")
     v = SanctionsValidator(spark, sanction_path=path)

@@ -1,4 +1,5 @@
-"""A repeat validation run reuses the generated code of the first.
+"""A repeat validation run, or screening call, reuses the generated code
+of the first.
 
 Spark caches compiled whole-stage and expression code keyed on the
 generated source. A suite whose sources are stable across runs, in a
@@ -50,14 +51,48 @@ spark.stop()
 """
 
 
-def test_repeat_run_reuses_generated_code():
+_SCREENS = """
+import json
+
+from perl_data_validate_sanctions_spark.api import SanctionsValidator
+from perl_data_validate_sanctions_spark.session import get_spark
+from perl_data_validate_sanctions_spark.sources.synth import synth_entries
+
+spark = get_spark(app_name="pdvs-codegen-reuse", cores=4, shuffle_partitions=4)
+metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+v = SanctionsValidator(spark, entries=synth_entries(spark, n_extra=30))
+probes = [
+    ("Zaki", "Ahmad", "1999-01-05"),
+    ("NEVEROV", "Sergei Ivanovich", "-253411200"),
+    ("chris", "down", None),
+    ("Ali Hassan", "Majid", "1970-01-01"),
+    ("nobody", "anywhere", "1980-02-29"),
+]
+
+
+def compiled_by_one_call(first, last, dob):
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    v.get_sanctioned_info(first_name=first, last_name=last, date_of_birth=dob)
+    return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+
+print(json.dumps([compiled_by_one_call(*p) for p in probes]))
+spark.stop()
+"""
+
+
+def _compiled_per_op(script: str) -> list[int]:
     env = dict(os.environ)
     env["PYTHONPATH"] = os.pathsep.join(
         [REPO] + [p for p in [env.get("PYTHONPATH")] if p])
-    proc = subprocess.run([sys.executable, "-c", _RUNS], cwd=REPO, env=env,
+    proc = subprocess.run([sys.executable, "-c", script], cwd=REPO, env=env,
                           capture_output=True, text=True, timeout=600)
     assert proc.returncode == 0, proc.stderr[-4000:]
-    warm, *repeats = json.loads(proc.stdout.strip().splitlines()[-1])
+    return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+def test_repeat_run_reuses_generated_code():
+    warm, *repeats = _compiled_per_op(_RUNS)
     assert warm > 0
     # AQE numbers the codegen stages it re-plans in the order concurrent
     # stages finish, so a repeat may compile a handful of renumbered
@@ -65,3 +100,12 @@ def test_repeat_run_reuses_generated_code():
     # that noise. Per-run literals in generated code, or a cache smaller
     # than the suite, recompile nearly everything on every repeat.
     assert min(repeats) <= warm // 10, (warm, repeats)
+
+
+def test_repeat_screening_reuses_generated_code():
+    """Each call's probe values are data in its local relation, never
+    literals in generated code, so a call with new values compiles
+    nothing the first call did not."""
+    warm, *repeats = _compiled_per_op(_SCREENS)
+    assert warm > 0
+    assert min(repeats) <= 2, (warm, repeats)
