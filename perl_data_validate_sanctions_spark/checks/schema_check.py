@@ -3,27 +3,17 @@ closed entry vocabulary (every parser converges on one schema,
 Fetcher.pm:199-256) and its publish-date sanity gate ``updated > 1``
 (Fetcher.pm:847).
 
-Structural conformance (StructType equality) is a driver-side
-assertion; domain rules are one narrow Column-predicate pass."""
+Domain rules are one narrow Column-predicate pass."""
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..schema import IMAGES_SCHEMA, VIOLATION_SCHEMA
+from ..schema import VIOLATION_SCHEMA
 
 ALLOWED_FMTS = ("png", "jpeg", "webp")
 MAX_DIM = 1 << 16
-
-
-def assert_images_schema(df: DataFrame) -> None:
-    """Structural check: names+types must match the input_hint schema."""
-    got = [(f.name, f.dataType) for f in df.schema.fields]
-    want = [(f.name, f.dataType) for f in IMAGES_SCHEMA.fields]
-    if got != want:
-        raise ValueError(f"schema mismatch: got {got}, want {want}")
 
 
 def schema_violations(

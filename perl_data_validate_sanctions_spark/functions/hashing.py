@@ -19,7 +19,7 @@ change-detection property the reference uses the hash for.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -77,19 +77,4 @@ def content_hash_agg_scalable(
             s2.cast("string"),
         ),
         256,
-    )
-
-
-def dataset_content_hash(df: DataFrame, group_cols: list[str], hash_cols: list[str]) -> DataFrame:
-    """Per-group canonical content hash + row count (change-detection unit,
-    one row per source — the analog of the reference's per-source
-    ``{updated, content}`` hash at Fetcher.pm:853)."""
-    h = canonical_row_hash(*hash_cols).alias("_row_hash")
-    return (
-        df.select(*group_cols, h)
-        .groupBy(*group_cols)
-        .agg(
-            content_hash_agg("_row_hash").alias("content_hash"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
     )

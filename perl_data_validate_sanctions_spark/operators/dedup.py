@@ -51,20 +51,6 @@ def exact_dedup(
 
 # --- shingles + Jaccard ------------------------------------------------------
 
-def word_shingles(col: Column | str, w: int = 3) -> Column:
-    """Distinct w-token shingles of a document.
-
-    NOTE (cost): as a single Column expression the tokenizer
-    (``words(col)``) is inlined into the transform lambda and
-    re-evaluated PER SHINGLE (Catalyst has no let-binding and
-    higher-order functions are interpreted without common-subexpression
-    elimination) — O(|doc|²) work per document. ``_shingle_table``
-    avoids that by materializing the token array in its own projection
-    first (:func:`shingles_from_tokens`); prefer that shape anywhere
-    the document is more than a few tokens."""
-    return shingles_from_tokens(words(col), w)
-
-
 def shingles_from_tokens(toks: Column, w: int = 3) -> Column:
     """Distinct w-token shingles of an ALREADY-TOKENIZED document.
 

@@ -41,8 +41,12 @@ scan).
 
 from __future__ import annotations
 
+import hashlib
+import pickle
+import threading
 import zlib
 
+from pyspark import Broadcast
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
@@ -263,6 +267,66 @@ class ProbeIndex:
         return cls(build_token_index(build_name_dim(entries)))
 
 
+class DimSnapshot:
+    """What the caption screen derives from one entries frame, each part
+    built once, on first use: the entry count (the ``"auto"`` rule), the
+    collected dimension rows, their broadcast and content key (Arrow)
+    and :func:`_caption_index` (native) — as the reference builds its
+    ``_index`` once per ``_load_data`` (Sanctions.pm:321-352). One slot,
+    keyed on the frame's IDENTITY: :meth:`of` with another frame
+    releases the held snapshot and destroys its broadcast, so a plan
+    built on it fails when it runs."""
+
+    _held: DimSnapshot | None = None
+    _lock = threading.RLock()
+
+    def __init__(self, entries: DataFrame):
+        self.entries = entries
+        self._parts: dict[str, object] | None = {}
+
+    @classmethod
+    def of(cls, entries: DataFrame) -> DimSnapshot:
+        with cls._lock:
+            if cls._held is None or cls._held.entries is not entries:
+                if cls._held is not None:
+                    cls._held.release()
+                cls._held = cls(entries)
+            return cls._held
+
+    def _part(self, name: str, build):
+        with self._lock:
+            if self._parts is None:
+                raise RuntimeError("DimSnapshot released: another entries frame replaced it")
+            if name not in self._parts:
+                self._parts[name] = build()
+            return self._parts[name]
+
+    def count(self) -> int:
+        return self._part("count", self.entries.count)
+
+    def rows(self) -> list[dict]:
+        return self._part("rows", lambda: [
+            r.asDict() for r in build_name_dim(self.entries)
+            .select("entry_id", "source", "name", "name_tokens").collect()])
+
+    def broadcast(self) -> tuple[Broadcast, str]:
+        """The rows as one broadcast, and their sha1 (the worker index key)."""
+        return self._part("broadcast", lambda: (
+            self.entries.sparkSession.sparkContext.broadcast(self.rows()),
+            hashlib.sha1(pickle.dumps(self.rows())).hexdigest()))
+
+    def caption_index(self) -> tuple[list[tuple], list[tuple], list[int]]:
+        return self._part("caption_index", lambda: _caption_index(self.rows()))
+
+    def release(self) -> None:
+        with self._lock:
+            parts, self._parts = self._parts or {}, None
+        bc = parts.get("broadcast")
+        # a stopped context already dropped its broadcasts and temp dir
+        if bc is not None and bc[0]._sc._jsc is not None:
+            bc[0].destroy()
+
+
 def match_probes(
     probes: DataFrame,
     entries: DataFrame | ProbeIndex,
@@ -376,12 +440,12 @@ def _with_physical_row_key(
     )
 
 
-def _collect_caption_index(entries: DataFrame):
-    """Driver-side build of the caption-path token index: collect the
-    name DIMENSION (broadcast-scale by definition — the reference holds
-    exactly this in process memory as its ``_index`` multimap,
-    Sanctions.pm:346-348), rank it, and apply the prefix-filter
-    document-frequency cap.
+def _caption_index(rows: list[dict]):
+    """Driver-side build of the caption-path token index from the
+    collected name DIMENSION rows (:meth:`DimSnapshot.rows` —
+    broadcast-scale by definition; the reference holds exactly this in
+    process memory as its ``_index`` multimap, Sanctions.pm:346-348):
+    rank them, and apply the prefix-filter document-frequency cap.
 
     Ranking: rows sorted by (source, name, entry_id) get a dense int
     ``__rank`` whose numeric order IS the lexicographic order the old
@@ -406,9 +470,9 @@ def _collect_caption_index(entries: DataFrame):
 
     Building this in driver Python instead of a Spark plan trades ~8
     tiny dimension jobs (DF groupBy, two windows, three broadcasts) for
-    ONE collect — measurable fixed latency on the 600 k hot path, and
-    byte-identical index content. Returns (index_rows, meta_rows,
-    df_arr): index_rows = (token, rank, nsize, keep, dropped_token,
+    the snapshot's one collect — measurable fixed latency on the 600 k
+    hot path, and byte-identical index content. Returns (index_rows,
+    meta_rows, df_arr): index_rows = (token, rank, nsize, keep, dropped_token,
     name_token_set) with nsize the RAW token count (min-size rule
     counts duplicates, Sanctions.pm:430), meta_rows = (rank, source,
     name), and df_arr a ``_DF_SLOTS``-long int list holding
@@ -420,11 +484,6 @@ def _collect_caption_index(entries: DataFrame):
     uses df_eff, not raw DF, for exactly that shared-order reason; a
     collision can only make a name drop a slightly-less-common token.
     """
-    rows = (
-        build_name_dim(entries)
-        .select("entry_id", "source", "name", "name_tokens")
-        .collect()
-    )
     rows = [r for r in rows if r["name_tokens"]]
     rows.sort(key=lambda r: (r["source"], r["name"], r["entry_id"]))
     tok_sets = [sorted(set(r["name_tokens"])) for r in rows]
@@ -489,7 +548,7 @@ def match_captions(
     1. Prefix filter on BOTH sides (ppjoin-style, one global
        (df_eff, token) order shared via the index's df_arr): the name
        side drops its max-order token from the kept postings
-       (:func:`_collect_caption_index`), and each multi-token probe
+       (:func:`_caption_index`), and each multi-token probe
        drops ITS max-order token (``__pdrop``) from candidate
        generation. For an overlap-≥2 match the smallest common token
        under the global order provably survives in both prefixes (it
@@ -530,7 +589,7 @@ def match_captions(
     ~2^-64 event per file pair, documented as accepted.
     """
     spark = images.sparkSession
-    index_rows, meta_rows, df_arr = _collect_caption_index(entries)
+    index_rows, meta_rows, df_arr = DimSnapshot.of(entries).caption_index()
     # ship the driver-built index as Arrow columns, not pickled rows:
     # the pickled-row path serialized row by row and was the fulldim
     # outlier source (74k index rows: 2.3-9.7 s PER CALL in the round-6
@@ -560,7 +619,7 @@ def match_captions(
     # token per row: measured 14-16 s at 600 k rows × fulldim blob vs
     # 0.78 s for a lookup-free argmax. Slot collisions only perturb
     # WHICH token each side drops, never correctness: the index side
-    # (driver Python, _collect_caption_index) uses the same slotted
+    # (driver Python, _caption_index) uses the same slotted
     # df_eff, so both sides share one exact global (df_eff, token)
     # order. Unknown tokens read whatever their slot holds — harmless,
     # the proof needs only a shared total order.

@@ -3,12 +3,12 @@ north_star's "fuzzy token-match tiers re-expressed as vectorized pandas
 UDF predicates").
 
 Shape: ``mapInPandas`` over the images table with the (small) name
-dimension shipped to every Python worker as a Spark broadcast variable —
-the distributed equivalent of the reference holding its whole dataset
-in process memory (Sanctions.pm:321-352). Zero shuffles: one narrow map
-stage; each Arrow batch is screened against a worker-local inverted
-token index (the same candidate-pruning structure as Sanctions.pm:
-346-348).
+dimension shipped to every Python worker as a Spark broadcast variable
+(one per entries frame, ``DimSnapshot``) — the distributed equivalent
+of the reference holding its whole dataset in process memory
+(Sanctions.pm:321-352). Zero shuffles: one narrow map stage; each Arrow
+batch is screened against a worker-local inverted token index (the
+same candidate-pruning structure as Sanctions.pm:346-348).
 
 Trade-off vs the native Catalyst path (operators/matcher.py): no
 shuffle at all (vs a ~2%-of-rows shuffle), but pays the Arrow hop.
@@ -28,9 +28,8 @@ from typing import Any
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .matcher import build_name_dim
+from .matcher import DimSnapshot
 
 # [^\w\s] strips punctuation, [\d_] strips digits/underscore: together
 # they leave exactly Unicode letters + whitespace (Java \p{L} twin)
@@ -150,35 +149,26 @@ class _MatcherIndex:
         return best
 
 
-# Worker-process index cache (guide §4.5: heavyweight per-task init →
-# module-level global guarded by PID, legal because this module is
-# importable on executors — not pickled by value). Building
-# _MatcherIndex over the full 15,664-entry dimension costs ~0.3 s and
-# ran once PER TASK (~60-200 tasks per 600k-row pass); a reused Python
-# worker (spark.python.worker.reuse, the default) now builds it once
-# per DIMENSION CONTENT per process. The key is a sha1 over the
-# pickled dimension rows, computed on the driver — content-addressed,
-# so a changed dimension can never hit a stale index; insertion order
-# is bounded so a long-lived worker can't accumulate dimensions. The
-# cached object is an index over the (broadcast-scale) dimension only —
-# never over scanned data — mirroring the reference's own in-process
-# ``_index`` multimap (Sanctions.pm:346-348).
-_INDEX_CACHE: dict[tuple[int, str], "_MatcherIndex"] = {}
+# Worker-process index cache: a module-level global (this module is
+# importable on executors, not pickled by value). Building _MatcherIndex
+# over the full 15,664-entry dimension costs ~0.3 s and ran once PER
+# TASK; a reused Python worker (spark.python.worker.reuse, the default)
+# builds it once per DIMENSION CONTENT. The key is the snapshot's sha1
+# of the pickled rows, computed once on the driver with its broadcast,
+# so a changed dimension never hits a stale index; the bound keeps a
+# long-lived worker from accumulating dimensions. It indexes the
+# broadcast-scale dimension only, as the reference's in-process
+# ``_index`` multimap does (Sanctions.pm:346-348).
+_INDEX_CACHE: dict[str, _MatcherIndex] = {}
 _INDEX_CACHE_MAX = 4
 
 
-def _worker_index(content_key: str, bc) -> "_MatcherIndex":
-    import os
-
-    pid = os.getpid()
-    key = (pid, content_key)
-    idx = _INDEX_CACHE.get(key)
+def _worker_index(content_key: str, bc) -> _MatcherIndex:
+    idx = _INDEX_CACHE.get(content_key)
     if idx is None:
-        idx = _MatcherIndex(bc.value)
-        mine = [k for k in _INDEX_CACHE if k[0] == pid]
-        if len(mine) >= _INDEX_CACHE_MAX:
-            _INDEX_CACHE.pop(mine[0], None)
-        _INDEX_CACHE[key] = idx
+        if len(_INDEX_CACHE) >= _INDEX_CACHE_MAX:
+            _INDEX_CACHE.pop(next(iter(_INDEX_CACHE)))
+        idx = _INDEX_CACHE[content_key] = _MatcherIndex(bc.value)
     return idx
 
 
@@ -188,24 +178,14 @@ def match_captions_arrow(
     id_col: str = "image_id",
     caption_col: str = "caption",
 ) -> DataFrame:
-    """Same contract as matcher.match_captions, zero-shuffle Arrow path."""
-    spark = images.sparkSession
-    dim_rows = [
-        r.asDict()
-        for r in build_name_dim(entries)
-        .select("entry_id", "source", "name", "name_tokens")
-        .collect()
-    ]
-    bc = spark.sparkContext.broadcast(dim_rows)
+    """Same contract as matcher.match_captions, zero-shuffle Arrow path.
 
+    The dimension rides the broadcast of ``DimSnapshot.of(entries)``, one
+    per entries frame. A call of either caption matcher with another
+    frame destroys it, and this plan then fails when run: run it first."""
+    bc, content_key = DimSnapshot.of(entries).broadcast()
     id_type = images.schema[id_col].dataType.simpleString()
     out_schema = f"{id_col} {id_type}, list string, matched_name string"
-    import hashlib
-    import pickle
-
-    content_key = hashlib.sha1(
-        pickle.dumps(dim_rows)
-    ).hexdigest()
 
     def screen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         index = _worker_index(content_key, bc)

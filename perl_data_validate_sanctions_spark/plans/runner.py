@@ -31,7 +31,7 @@ from ..checks.referential import referential_violations
 from ..checks.schema_check import schema_violations
 from ..checks.stats import column_stats
 from ..checks.unique import uniqueness_violations
-from ..operators.matcher import match_captions
+from ..operators.matcher import DimSnapshot, match_captions
 from ..operators.matcher_arrow import match_captions_arrow
 from ..schema import VIOLATION_SCHEMA
 from ..session import local_frame, release_checkpoint
@@ -68,9 +68,9 @@ def resolve_match_strategy(n_dim_entries: int) -> str:
     full dimension (65-94 s vs Arrow's 9-12.5 s at 2.4 M), so rows
     never flip the choice and the rule takes no row count. Dimension
     size does: beyond the budget the rule picks the native path. That
-    path also collects the whole dimension to the driver
-    (``_collect_caption_index``) and joins the token index built there
-    under an ``F.broadcast`` hint, so the index is held once per
+    path also collects the whole dimension to the driver, once per
+    entries frame (``DimSnapshot``), and joins the token index built
+    there under an ``F.broadcast`` hint, so the index is held once per
     executor JVM instead of once per Python worker."""
     if n_dim_entries > AUTO_ARROW_DIM_MAX_ENTRIES:
         return "native"
@@ -119,9 +119,8 @@ def _sanctioned(r: _Run) -> DataFrame | None:
         return None
     strategy = r.match_strategy
     if strategy == "auto":
-        # one count() job on the (small) dimension table; the rule itself
-        # is kept pure and pytest-pinned at both dimension scales
-        strategy = resolve_match_strategy(r.entries.count())
+        # the snapshot's count: one job per entries frame, not per run
+        strategy = resolve_match_strategy(DimSnapshot.of(r.entries).count())
     matcher = match_captions_arrow if strategy == "arrow" else match_captions
     # a sanctioned caption is a violation row (the reference's {matched: 1}
     # verdict as a constraint failure); the logical partition derives from
@@ -199,7 +198,8 @@ def run_validation(
     SCALING.md crossover rule, :func:`resolve_match_strategy`: the
     Arrow screen while the dimension fits the worker-local index
     budget, the native relational path beyond it (which also collects
-    the dimension to the driver, then broadcast-joins its token index).
+    the dimension to the driver once per entries frame, then
+    broadcast-joins its token index).
     Explicit ``"arrow"`` / ``"native"`` override the rule — e.g. native
     when Python worker slots are the scarce resource; the two paths are
     output-identical by pinned contract.

@@ -284,6 +284,55 @@ def test_caption_match_native_and_arrow_agree(spark):
             assert first_tok in caps[iid].upper()
 
 
+def test_caption_matchers_share_one_dim_collect(spark, monkeypatch):
+    """Both caption matchers, called in turn on one entries frame, read
+    the dimension through one snapshot: it is collected once."""
+    from perl_data_validate_sanctions_spark.operators import matcher
+
+    calls: list[int] = []
+    real = matcher.build_name_dim
+
+    def spy(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(matcher, "build_name_dim", spy)
+    images = synth_images(spark, 1000, num_partitions=4)
+    entries = synth_entries(spark, n_extra=20)
+    outs = [sorted(m(images, entries).collect())
+            for m in (match_captions, match_captions_arrow, match_captions)]
+    assert len(calls) == 1
+    assert outs[0] == outs[1] == outs[2] and outs[0]
+
+
+def test_arrow_broadcast_files_do_not_accumulate(spark):
+    """Repeat Arrow screens of one entries frame share one broadcast, and
+    a new frame releases the old one, so the driver's broadcast temp
+    files never pile up."""
+    import os
+
+    from py4j.protocol import Py4JJavaError
+
+    tmp = spark.sparkContext._temp_dir
+    before = set(os.listdir(tmp))
+
+    def new_files() -> set[str]:
+        return set(os.listdir(tmp)) - before
+
+    images = synth_images(spark, 500, num_partitions=2)
+    a = synth_entries(spark, n_extra=20)
+    for _ in range(6):
+        match_captions_arrow(images, a).count()
+    assert len(new_files()) <= 1
+    stale = match_captions_arrow(images, a)
+    b = synth_entries(spark, n_extra=21)
+    match_captions_arrow(images, b).count()
+    assert len(new_files()) <= 1
+    # a plan built on the released snapshot fails; it never returns a miss
+    with pytest.raises(Py4JJavaError, match="destroyed"):
+        stale.count()
+
+
 def test_caption_match_dup_id_rows_each_get_a_verdict(spark):
     """Explicit dup-id fixture: the same image_id on two physical rows
     with a sanctioned caption → exactly two verdict rows on BOTH paths

@@ -258,6 +258,62 @@ def test_auto_strategy_dispatch(spark, images, ref_dims, monkeypatch):
     assert calls == ["arrow", "native", "native"]
 
 
+def test_new_entries_frame_invalidates_dim_snapshot(spark):
+    """The caption screen's dimension snapshot follows the entries frame:
+    a name only in the new frame is flagged, a name only in the old one
+    no longer is, and going back to the old frame reuses nothing built
+    for the new one."""
+    from perl_data_validate_sanctions_spark.schema import ENTRY_SCHEMA
+
+    images = spark.createDataFrame(
+        [("img-a", "A photo of Ivor Onlya in Rivertown", 64, 64, "png"),
+         ("img-b", "A photo of Bella Onlyb in Rivertown", 64, 64, "png"),
+         ("img-c", "An ordinary landscape", 64, 64, "png")],
+        "image_id string, caption string, w int, h int, fmt string",
+    )
+
+    def frame(eid, source, name):
+        return spark.createDataFrame([(eid, source, [name]) + (None,) * 10],
+                                     ENTRY_SCHEMA)
+
+    def flagged(entries):
+        report = run_validation(images, entries=entries, checks=("sanctioned",),
+                                with_stats=False)
+        return {(r["image_id"], r["detail"]) for r in report.violations.collect()}
+
+    a = frame(1, "list-A", "Ivor Onlya")
+    b = frame(2, "list-B", "Bella Onlyb")
+    assert flagged(a) == {("img-a", "matched Ivor Onlya on list-A")}
+    assert flagged(b) == {("img-b", "matched Bella Onlyb on list-B")}
+    assert flagged(a) == {("img-a", "matched Ivor Onlya on list-A")}
+
+
+def test_warm_run_submits_no_dimension_job(spark, images, monkeypatch):
+    """A repeat run over the SAME entries frame reuses its snapshot: no
+    count job for the "auto" rule, no name-dimension collect, no new
+    broadcast."""
+    from perl_data_validate_sanctions_spark.operators import matcher
+
+    entries = synth_entries(spark, n_extra=30)
+    small = images.limit(500)
+    first = run_validation(small, entries=entries, checks=("sanctioned",),
+                           with_stats=False)
+    calls: list[str] = []
+    real_dim, real_count = matcher.build_name_dim, entries.count
+
+    def spy_dim(*a, **k):
+        calls.append("build_name_dim")
+        return real_dim(*a, **k)
+
+    monkeypatch.setattr(matcher, "build_name_dim", spy_dim)
+    monkeypatch.setattr(entries, "count",
+                        lambda: calls.append("count") or real_count())
+    again = run_validation(small, entries=entries, checks=("sanctioned",),
+                           with_stats=False)
+    assert calls == []
+    assert sorted(again.violations.collect()) == sorted(first.violations.collect())
+
+
 def test_runner_psi_opt_in_check(spark, images):
     """The opt-in PSI drift check (plans/runner.py PSI_CHECK) rides the
     SAME cube as the default drift branches — no extra table scan — and
