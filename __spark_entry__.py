@@ -668,10 +668,9 @@ GROUP BY r.pid, ow.no
 def q_drift_psi_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index drift of event_type mix per
     day-of-week partition vs the rest of the table — the third drift
-    statistic next to KS and chi-square. PSI is algebraic over the
-    value histogram, so unlike those two it stays entirely JVM-side
-    (two HashAggregates, no applyInPandas — checks/drift.py
-    _psi_from_grid); the oracle recomputes the full definition
+    statistic next to KS and chi-square, computed in the same
+    mapInPandas pass over the value histogram (checks/drift.py
+    drift_from_hist); the oracle recomputes the full definition
     (eps-floored proportions, rest-of-table holdout, 0.25 major-shift
     band) in pure SQL."""
     from perl_data_validate_sanctions_spark.checks.drift import drift_check

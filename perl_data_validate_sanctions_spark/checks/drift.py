@@ -1,21 +1,27 @@
 """Distribution-drift detection per partition: KS for numeric columns,
-chi-square for categoricals — the statistics run over Arrow batches via
-``applyInPandas`` (BASELINE.json north_star: "KS and chi-square
-statistics computed with mapInPandas over Arrow batches, no per-row
-Python"), but the heavy lifting never leaves the JVM:
+chi-square and PSI for categoricals, each partition against the
+rest-of-table holdout (global minus own counts — unbiased). The
+statistics run in ``mapInPandas`` over Arrow batches (BASELINE.json
+north_star), in two phases:
 
   phase 1 (native, map-side combined): groupBy(partition, value).count()
            — at 10^12 rows this reduces each partition to its value
            histogram (≤ a few thousand rows per partition for pixel
            dimensions / formats);
-  phase 2 (broadcast): the global histogram joins in;
-  phase 3 (Arrow): one pandas group per partition computes the
-           statistic against the rest-of-table distribution
-           (global minus own counts — unbiased holdout).
+  phase 2 (Arrow, ONE Python task): ``repartition(1).mapInPandas`` pivots
+           each column of the histogram to a dense partition × value
+           count matrix (an absent value is a zero cell) and computes
+           every requested statistic from it. The holdout is the column
+           sum minus the row — arithmetic, no join.
 
-So Python sees only histograms, never rows."""
+So Python sees only histograms, never rows. The bound: the histogram
+must fit one Python worker — partitions × distinct values per column,
+small for the low-cardinality columns drift applies to. Bin a
+high-cardinality column first."""
 
 from __future__ import annotations
+
+from typing import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -30,6 +36,13 @@ _RESULT_SCHEMA = (
     "p_value double, n long, drifted boolean"
 )
 
+# PSI's standard industry decision bands: < 0.1 stable, 0.1-0.25
+# moderate shift, > 0.25 major shift. The default flags at 0.25.
+PSI_THRESHOLD = 0.25
+# proportion floor for empty cells (the usual PSI smoothing — keeps
+# ln() finite when a value is absent from one side of the comparison)
+_PSI_EPS = 1e-6
+
 
 def drift_check(
     df: DataFrame,
@@ -37,7 +50,7 @@ def drift_check(
     partition_expr: Column,
     kind: str = "ks",
     alpha: float = 1e-6,
-    psi_threshold: float = 0.25,
+    psi_threshold: float = PSI_THRESHOLD,
 ) -> DataFrame:
     """Per-partition drift verdicts: (partition_id, column, kind,
     statistic, p_value, n, drifted).
@@ -48,129 +61,82 @@ def drift_check(
     the statistic itself instead (``psi_threshold``, default the
     industry major-shift band 0.25) — PSI is a divergence, not a test.
     """
-    if kind not in ("ks", "chi2", "psi"):
-        raise ValueError(kind)
-
     hist = (
-        df.select(partition_expr.cast("int").alias("partition_id"),
-                  F.col(value_col).alias("value"))
-        .filter(F.col("value").isNotNull())
-        .groupBy("partition_id", "value")
+        df.select(partition_expr.cast("int").alias("partition_id"), value_col)
+        .filter(F.col(value_col).isNotNull())
+        .groupBy("partition_id", value_col)
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    return drift_from_hist(hist, value_col, kind=kind, alpha=alpha,
+    return drift_from_hist(hist, [(value_col, kind)], alpha=alpha,
                            psi_threshold=psi_threshold)
 
 
-# PSI's standard industry decision bands: < 0.1 stable, 0.1-0.25
-# moderate shift, > 0.25 major shift. The default flags at 0.25.
-PSI_THRESHOLD = 0.25
-# proportion floor for empty cells (the usual PSI smoothing — keeps
-# ln() finite when a value is absent from one side of the comparison)
-_PSI_EPS = 1e-6
+def _statistics(own: np.ndarray, values: pd.Index, kind: str, alpha: float,
+                psi_threshold: float) -> tuple[np.ndarray, ...]:
+    """(statistic, p_value, drifted) per row of the partition × value
+    count matrix ``own``, each row against the rest of the table. An
+    empty holdout is all zeros, so dividing it by max(total, 1) is exact.
 
-
-def _psi_from_grid(joined: DataFrame, value_col: str,
-                   threshold: float) -> DataFrame:
-    """Population Stability Index per partition vs the rest-of-table
-    holdout. PSI = Σ (p_own − p_rest)·ln(p_own / p_rest) over the value
-    bins — ALGEBRAIC over the histogram, so unlike KS (needs the sorted
-    CDF walk) and chi-square (kept Arrow-side for parity with its
-    scipy-shaped math) it never leaves the JVM: two HashAggregates over
-    histogram-sized data, no applyInPandas, no Python workers.
-
-    Zero-mass cells on either side are floored at ``_PSI_EPS`` (the
-    standard smoothing); a degenerate single-partition table (empty
-    holdout) floors every rest-proportion, yielding a large PSI — the
-    same "this holdout is meaningless" signal chi2's penalty term
-    gives. p_value is NULL: PSI is a divergence with decision bands,
-    not a test statistic."""
-    totals = joined.groupBy("partition_id").agg(
-        F.sum("n").alias("__own_tot"),
-        F.sum(F.col("n_global") - F.col("n")).alias("__rest_tot"),
-    )
-    cells = joined.join(F.broadcast(totals), "partition_id")
-    own_tot = F.col("__own_tot").cast("double")
-    rest_tot = F.col("__rest_tot").cast("double")
-    p_own = F.greatest(F.col("n").cast("double") / own_tot,
-                       F.lit(_PSI_EPS))
-    rest_n = (F.col("n_global") - F.col("n")).cast("double")
-    p_rest = F.greatest(
-        F.when(rest_tot > 0, rest_n / rest_tot).otherwise(F.lit(0.0)),
-        F.lit(_PSI_EPS),
-    )
-    term = (p_own - p_rest) * F.log(p_own / p_rest)
-    return (
-        cells.groupBy("partition_id")
-        .agg(F.sum(term).alias("statistic"),
-             F.sum("n").cast("long").alias("n"))
-        .select(
-            "partition_id",
-            F.lit(value_col).alias("column"),
-            F.lit("psi").alias("kind"),
-            F.col("statistic").cast("double").alias("statistic"),
-            F.lit(None).cast("double").alias("p_value"),
-            "n",
-            (F.col("statistic") > F.lit(float(threshold))).alias("drifted"),
-        )
-    )
+    PSI = Σ (p_own − p_rest)·ln(p_own / p_rest) over the value bins,
+    zero-mass cells floored at ``_PSI_EPS`` (the standard smoothing); a
+    single-partition table (empty holdout) floors every rest-proportion,
+    yielding a large PSI — the same "this holdout is meaningless" signal
+    chi2's penalty term gives. Its p_value is NULL: PSI is a divergence
+    with decision bands, not a test statistic."""
+    rest = own.sum(axis=0) - own
+    if kind == "psi":
+        p_own = np.maximum(own / own.sum(axis=1, keepdims=True), _PSI_EPS)
+        rest_tot = np.maximum(rest.sum(axis=1, keepdims=True), 1)
+        p_rest = np.maximum(rest / rest_tot, _PSI_EPS)
+        psi = ((p_own - p_rest) * np.log(p_own / p_rest)).sum(axis=1)
+        return psi, np.full(len(psi), np.nan), psi > psi_threshold
+    if kind == "ks":
+        x = pd.to_numeric(values).to_numpy(dtype=np.float64)
+        sp = [ks_two_sample_from_counts(x, o, r) for o, r in zip(own, rest)]
+    else:
+        sp = [chi2_from_counts(o, r / max(r.sum(), 1))[:2] for o, r in zip(own, rest)]
+    stat, p = np.array(sp, dtype=np.float64).T
+    return stat, p, p < alpha
 
 
 def drift_from_hist(
     hist: DataFrame,
-    value_col: str,
-    kind: str = "ks",
+    specs: Iterable[tuple[str, str]],
     alpha: float = 1e-6,
     psi_threshold: float = PSI_THRESHOLD,
 ) -> DataFrame:
-    """Same verdicts from a prebuilt (partition_id, value, n) histogram —
-    lets the runner feed several drift checks from one cube scan."""
-    global_hist = hist.groupBy("value").agg(F.sum("n").alias("n_global"))
-    # full (partition × value) grid: a value absent from a partition but
-    # present elsewhere must still reach the statistic as own=0 —
-    # otherwise `rest` (global minus own) silently drops that value's
-    # mass from the holdout CDF (KS) / expected proportions (chi2), a
-    # bias whenever partitions don't share the same support. The grid is
-    # |partitions| × |distinct values| histogram rows — tiny for the
-    # low-cardinality columns drift applies to, and built broadcast-side.
-    parts = hist.select("partition_id").distinct()
-    grid = parts.crossJoin(F.broadcast(global_hist))  # both tiny
-    joined = grid.join(hist, ["partition_id", "value"], "left").fillna(
-        0, ["n"]
-    )
+    """Drift verdicts for every ``(column, kind)`` spec from one
+    (partition_id, <columns>, n) histogram, all computed in one Python
+    task — lets the runner feed every drift check from one cube scan.
 
-    if kind == "psi":
-        return _psi_from_grid(joined, value_col, psi_threshold)
+    A partition gets a row for a column only if it holds a non-null
+    value of it. ``repartition(1)``, not ``coalesce(1)``: a narrow
+    coalesce would pull the histogram's own aggregation into the single
+    task too."""
+    specs = list(specs)
+    for _, kind in specs:
+        if kind not in ("ks", "chi2", "psi"):
+            raise ValueError(kind)
 
-    col_name, knd, a = value_col, kind, alpha
+    def verdicts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pdf = pd.concat(batches, ignore_index=True)
+        for col, kind in specs:
+            # dense partition × value counts, sorted both ways; null
+            # values (and partitions) drop out of the groupby
+            grid = pdf.groupby(["partition_id", col])["n"].sum().unstack(fill_value=0)
+            if grid.empty:
+                continue
+            own = grid.to_numpy(dtype=np.float64)
+            stat, p, drifted = _statistics(own, grid.columns, kind, alpha,
+                                           psi_threshold)
+            yield pd.DataFrame({
+                "partition_id": grid.index.to_numpy(dtype=np.int32),
+                "column": col, "kind": kind, "statistic": stat,
+                "p_value": p, "n": own.sum(axis=1).astype(np.int64),
+                "drifted": drifted,
+            })
 
-    def per_partition(pdf: pd.DataFrame) -> pd.DataFrame:
-        pid = int(pdf["partition_id"].iloc[0])
-        own = pdf["n"].to_numpy(dtype=np.float64)
-        rest = pdf["n_global"].to_numpy(dtype=np.float64) - own
-        if knd == "ks":
-            values = pd.to_numeric(pdf["value"]).to_numpy(dtype=np.float64)
-            stat, p = ks_two_sample_from_counts(values, own, rest)
-        else:
-            props = rest / rest.sum() if rest.sum() > 0 else rest
-            stat, p, _ = chi2_from_counts(own, props)
-        return pd.DataFrame(
-            [
-                dict(
-                    partition_id=pid,
-                    column=col_name,
-                    kind=knd,
-                    statistic=float(stat),
-                    p_value=float(p),
-                    n=int(own.sum()),
-                    drifted=bool(p < a),
-                )
-            ]
-        )
-
-    return joined.groupBy("partition_id").applyInPandas(
-        per_partition, _RESULT_SCHEMA
-    )
+    return hist.repartition(1).mapInPandas(verdicts, _RESULT_SCHEMA)
 
 
 def drift_violations(results: DataFrame) -> DataFrame:

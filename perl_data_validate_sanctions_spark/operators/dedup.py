@@ -106,6 +106,18 @@ def _shingle_table(
     return sh.cache() if cache else sh
 
 
+def _explode_shingles(sh: DataFrame, *extra: Column) -> DataFrame:
+    """(id, *extra, s): one row per shingle. ``explode_outer`` plus an
+    ``s IS NOT NULL`` filter, not ``explode``: Spark infers
+    ``size(sh) > 0`` from a plain explode and pushes it below the
+    exchange, where a lazy shingle table (``cache=False``) inlines the
+    whole tokenizer chain into that Filter (plans/r07 Filter (2)/(9)).
+    The null filter also keeps a null shingle out of the minhash minima
+    — ``xxhash64`` of null is not null."""
+    return (sh.select("id", *extra, F.explode_outer("sh").alias("s"))
+            .filter(F.col("s").isNotNull()))
+
+
 def _finish_pairs(result: DataFrame, cached: DataFrame | None) -> DataFrame:
     """Materialize the pair result, then release the shingle cache.
 
@@ -200,7 +212,7 @@ def ngram_jaccard_pairs(
     """
     own = shingles is None
     sh = _shingle_table(df, text_col, id_col, w, cache) if own else shingles
-    exploded = sh.select("id", F.explode("sh").alias("s"))
+    exploded = _explode_shingles(sh)
     if max_df is not None:
         rare = (
             exploded.groupBy("s")
@@ -237,7 +249,7 @@ def ngram_jaccard_pairs(
     # (guide §2.3 "shuffle keys and metadata instead of payloads" —
     # na/nb are functionally dependent on the group key, recovered with
     # a min aggregate)
-    sized = sh.select("id", F.size("sh").alias("n"), F.explode("sh").alias("s"))
+    sized = _explode_shingles(sh, F.size("sh").alias("n"))
     out = (
         sized.alias("a")
         .join(sized.alias("b"), "s")
@@ -320,7 +332,7 @@ def minhash_lsh_pairs(
     # in whole-stage codegen with map-side partials; the groupBy reuses
     # the shingle table's id-partitioning, so no exchange is added)
     mins = (
-        sh.select("id", F.explode("sh").alias("s"))
+        _explode_shingles(sh)
         .groupBy("id")
         .agg(
             *[

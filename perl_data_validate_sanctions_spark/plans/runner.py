@@ -43,6 +43,10 @@ from ..sources.synth import expected_caption, logical_partition
 # no table scan. run_validation(checks=DEFAULT_CHECKS + ("drift_psi_fmt",))
 PSI_CHECK = "drift_psi_fmt"
 
+# the drift checks: a (column, kind) spec each over the cube's histogram
+DRIFT_CHECKS = {"drift_w": ("w", "ks"), "drift_h": ("h", "ks"),
+                "drift_fmt": ("fmt", "chi2"), PSI_CHECK: ("fmt", "psi")}
+
 # captions look like "... in <Place>"; the trailing token is the
 # caption-side foreign key checked against the places dimension
 CAPTION_KEY_RE = r" in (\p{L}+)$"
@@ -110,8 +114,6 @@ class _Run:
     ref_keys: DataFrame | None
     match_strategy: str
     pixel_sample: int | None
-    cube: Callable[[], DataFrame]
-    drift_results: dict[str, DataFrame]
 
 
 def _sanctioned(r: _Run) -> DataFrame | None:
@@ -135,25 +137,12 @@ def _sanctioned(r: _Run) -> DataFrame | None:
     ).to(VIOLATION_SCHEMA)
 
 
-def _drift(col: str, kind: str) -> Callable[[_Run], DataFrame]:
-    """A drift check over the histogram of ``col`` read off the cube."""
-
-    def build(r: _Run) -> DataFrame:
-        hist = r.cube().filter(F.col(col).isNotNull()).groupBy(
-            "partition_id", F.col(col).alias("value")).agg(F.sum("n").alias("n"))
-        res = drift_from_hist(hist, col, kind=kind)
-        r.drift_results[col if kind != "psi" else f"{col}_psi"] = res
-        return drift_violations(res)
-
-    return build
-
-
 # The check registry, in build order: build(run) returns the check's
 # violation rows, or None when an input it needs was not given. Builds
 # look check functions up as module globals at call time, so a patched
-# or span-wrapped runner.<fn> is the one that runs. Drift comes LAST:
-# only it needs the materialized cube, so every other plan is built
-# while the cube job runs.
+# or span-wrapped runner.<fn> is the one that runs. The DRIFT_CHECKS
+# come after these: only they need the materialized cube, so every
+# other plan is built while the cube job runs.
 CHECKS: tuple[tuple[str, Callable[[_Run], DataFrame | None]], ...] = (
     ("schema", lambda r: schema_violations(r.images, r.part)),
     ("unique_image_id", lambda r: uniqueness_violations(
@@ -165,12 +154,9 @@ CHECKS: tuple[tuple[str, Callable[[_Run], DataFrame | None]], ...] = (
     ("integrity", lambda r: integrity_violations(
         r.images, r.part, expected_caption("image_id"), pixel_sample=r.pixel_sample)),
     ("sanctioned", _sanctioned),
-    ("drift_w", _drift("w", "ks")),
-    ("drift_h", _drift("h", "ks")),
-    ("drift_fmt", _drift("fmt", "chi2")),
-    (PSI_CHECK, _drift("fmt", "psi")),
 )
-DEFAULT_CHECKS = tuple(name for name, _ in CHECKS if name != PSI_CHECK)
+DEFAULT_CHECKS = (*(name for name, _ in CHECKS),
+                  *(name for name in DRIFT_CHECKS if name != PSI_CHECK))
 
 
 def run_validation(
@@ -247,26 +233,28 @@ def run_validation(
         cube = _checkpoint("cube", images.groupBy(
             part.cast("int").alias("partition_id"), "w", "h", "fmt"
         ).agg(F.count(F.lit(1)).alias("n")))
-        run = _Run(images, part, entries, ref_keys, match_strategy,
-                   pixel_sample, cube.result, {})
+        run = _Run(images, part, entries, ref_keys, match_strategy, pixel_sample)
 
-        # each check's job is submitted as soon as its plan is built. The
-        # tiny cube-derived drift branches fuse into ONE job (separate jobs
-        # each paid driver latency); `check` still tells them apart.
+        # each check's job is submitted as soon as its plan is built
         jobs: list[Future] = []
-        drift: list[DataFrame] = []
         for name, build in CHECKS:
             df = build(run) if name in checks else None
-            if df is not None and name.startswith("drift_"):
-                drift.append(df)
-            elif df is not None:
+            if df is not None:
                 jobs.append(_checkpoint(name, df))
-        if drift:
-            jobs.append(_checkpoint("drift(fused)", reduce(DataFrame.unionByName, drift)))
+        # every selected drift check is ONE Python pass over the cube,
+        # checkpointed as one piece that feeds drift_results and violations
+        specs = [spec for name, spec in DRIFT_CHECKS.items() if name in checks]
+        drift = _checkpoint("drift(fused)", drift_from_hist(cube.result(), specs)) if specs else None
         # the one-pass column stats are an independent scan the caller will
         # collect anyway: its job overlaps the checks instead of following
         stats_job = _checkpoint("stats", column_stats(images)) if with_stats else None
         pieces = [j.result() for j in jobs]
+        drift_results: dict[str, DataFrame] = {}
+        if drift is not None:
+            results = drift.result()
+            pieces.append(drift_violations(results))
+            drift_results = {col if kind != "psi" else f"{col}_psi": results.filter(
+                (F.col("column") == col) & (F.col("kind") == kind)) for col, kind in specs}
         stats_df = stats_job.result() if stats_job is not None else None
 
         if pieces:
@@ -332,4 +320,4 @@ def run_validation(
     finally:
         ex.shutdown(wait=False, cancel_futures=True)  # a failed build queues no more jobs
     return ValidationReport(violations, partition_verdicts, check_summary,
-                            stats_df, run.drift_results, checkpoints)
+                            stats_df, drift_results, checkpoints)

@@ -6,8 +6,10 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -24,7 +26,7 @@ from perl_data_validate_sanctions_spark.sources.synth import (  # noqa: E402
     synth_images,
 )
 
-OUT = "/root/repo/plans/PLANS.md"
+OUT = str(ROOT / "plans" / "PLANS.md")
 
 
 def fmt(df) -> str:
@@ -114,9 +116,9 @@ def main() -> None:
             ).extract_audio_features(
                 images.select(F.col("image_id").alias("audio_id"), "bytes")
             ),
-        "psi drift (algebraic over the histogram: all HashAggregate, "
-        "broadcast grid, NO applyInPandas — contrast the KS/chi2 "
-        "sections' Arrow stage)":
+        "psi drift (one partial-first histogram aggregate, then ONE "
+        "repartition(1) mapInPandas task computes the statistic — the "
+        "same pass KS and chi-square use; no join builds the holdout)":
             __import__(
                 "perl_data_validate_sanctions_spark.checks.drift",
                 fromlist=["drift_check"],

@@ -354,6 +354,60 @@ def test_drift_psi_single_partition_degenerate(spark):
     assert r["n"] == 10 and r["drifted"] and r["statistic"] > 5.0
 
 
+def test_drift_holdout_counts_absent_values_as_zero(spark):
+    """A value present in one partition only reaches every other
+    partition's chi-square and PSI as an own count of 0, and a
+    partition whose column is all null gets no row. Hand-computed."""
+    import math
+
+    from perl_data_validate_sanctions_spark.checks._stat_math import chi2_sf
+    from perl_data_validate_sanctions_spark.checks.drift import _PSI_EPS
+
+    rows = ([(0, "a")] * 6 + [(0, "b")] * 4 + [(1, "a")] * 5 + [(1, "b")] * 5
+            + [(2, "a")] * 3 + [(2, "b")] * 3 + [(2, "c")] * 4 + [(3, None)] * 5)
+    df = spark.createDataFrame(rows, "pid int, v string")
+    chi = {r["partition_id"]: r
+           for r in drift_check(df, "v", F.col("pid"), kind="chi2").collect()}
+    psi = {r["partition_id"]: r
+           for r in drift_check(df, "v", F.col("pid"), kind="psi").collect()}
+    assert set(chi) == set(psi) == {0, 1, 2}
+    assert [chi[p]["n"] for p in (0, 1, 2)] == [10, 10, 10]
+    # partition 0: own (a, b, c) = (6, 4, 0), rest = (8, 8, 4) → expected
+    # proportions (0.4, 0.4, 0.2) → expected counts (4, 4, 2)
+    stat = (6 - 4) ** 2 / 4 + (4 - 4) ** 2 / 4 + (0 - 2) ** 2 / 2
+    assert chi[0]["statistic"] == pytest.approx(stat, rel=1e-12)
+    assert chi[0]["p_value"] == pytest.approx(chi2_sf(stat, 2), rel=1e-12)
+    own, rest = (0.6, 0.4, 0.0), (0.4, 0.4, 0.2)
+    want = 0.0
+    for o, q in zip(own, rest):
+        o, q = max(o, _PSI_EPS), max(q, _PSI_EPS)
+        want += (o - q) * math.log(o / q)
+    assert psi[0]["statistic"] == pytest.approx(want, rel=1e-12)
+
+
+def test_drift_fused_specs_match_single_spec_calls(spark):
+    """One drift_from_hist call over several (column, kind) specs gives,
+    per spec, exactly the rows of a call with that spec alone."""
+    from perl_data_validate_sanctions_spark.checks.drift import drift_from_hist
+
+    hist = spark.createDataFrame(
+        [(0, "a", 1, 7), (0, "b", 2, 3), (1, "a", 1, 2), (1, "b", 3, 9),
+         (2, "c", None, 4), (2, "a", None, 1)],
+        "partition_id int, v string, u int, n long",
+    )
+    specs = [("v", "chi2"), ("v", "psi"), ("u", "ks")]
+
+    def key(r):
+        return r["column"], r["kind"], r["partition_id"]
+
+    fused = sorted(drift_from_hist(hist, specs).collect(), key=key)
+    alone = sorted((r for spec in specs
+                    for r in drift_from_hist(hist, [spec]).collect()), key=key)
+    assert fused == alone
+    # partition 2 holds no u value, so KS has no row for it
+    assert {r["partition_id"] for r in fused if r["column"] == "u"} == {0, 1}
+
+
 def test_column_quantiles_exact_and_approx(spark):
     """exact=True matches numpy's linear interpolation (the
     quantile_cont definition the oracle uses); the default mergeable

@@ -426,6 +426,33 @@ def test_minhash_lazy_opt_out(spark, docs):
     assert _n_cache_entries(spark) == before
 
 
+def _filter_conditions(df) -> list[str]:
+    """The condition of every Filter in ``df``'s physical plan, before
+    adaptive execution rewrites it."""
+    out, stack = [], [df._jdf.queryExecution().sparkPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Filter":
+            out.append(node.condition().toString())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return out
+
+
+def test_lazy_pair_plans_filter_without_the_tokenizer(spark, docs):
+    """No Filter of a lazy (cache=False) pair plan evaluates the
+    tokenizer. A plain explode of the shingle array makes Spark infer
+    size(sh) > 0 and push it below the exchange, where the lazy shingle
+    table inlines the whole split/transform chain into the condition."""
+    uniq = exact_dedup(docs)
+    for pairs in (ngram_jaccard_pairs(uniq, threshold=0.5, cache=False),
+                  minhash_lsh_pairs(uniq, threshold=0.5, cache=False)):
+        conds = _filter_conditions(pairs)
+        assert conds  # the text IS NOT NULL filter at least
+        for cond in conds:
+            assert "transform(" not in cond and "split(" not in cond, cond
+
+
 def test_phash_block_properties():
     """Pinned pHash laws (no Spark): deterministic, noise-robust
     (amp-16 variant stays within the near-dup band), discriminative

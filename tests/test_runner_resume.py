@@ -3,6 +3,8 @@ semantics (ported from t/05_sanctions_redis.t:231-298)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -335,6 +337,57 @@ def test_runner_psi_opt_in_check(spark, images):
     rollup = {r["check"] for r in report.violations.select("check").distinct().collect()}
     assert rollup <= {"drift_chi2", "drift_psi"}
     assert PSI_CHECK not in DEFAULT_CHECKS  # opt-in by design
+
+
+def _executed_nodes(df) -> list[str]:
+    """Node names of ``df``'s final executed physical plan (call after
+    an action)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return [re.sub(r"^[\s:|+-]*(\*\(\d+\) )?", "", line).split(" ")[0]
+            for line in plan.treeString().splitlines()]
+
+
+def test_fused_drift_is_one_python_pass(spark, images):
+    """Every drift statistic comes from one Python task over the cube:
+    no broadcast, cartesian or nested-loop join builds the holdout, and
+    the runner's drift piece runs in at most 3 stages."""
+    from py4j.protocol import Py4JJavaError
+
+    from perl_data_validate_sanctions_spark.checks.drift import drift_from_hist
+    from perl_data_validate_sanctions_spark.plans.runner import DRIFT_CHECKS
+    from perl_data_validate_sanctions_spark.session import release_checkpoint
+
+    part = logical_partition("image_id")
+    cube = images.groupBy(part.cast("int").alias("partition_id"), "w", "h", "fmt").agg(
+        F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    res = drift_from_hist(cube, DRIFT_CHECKS.values())
+    got = {(r["column"], r["kind"]) for r in res.collect()}
+    assert got == set(DRIFT_CHECKS.values())
+    nodes = _executed_nodes(res)
+    assert not {"BroadcastExchange", "CartesianProduct",
+                "BroadcastNestedLoopJoin"} & set(nodes), nodes
+    assert nodes.count("MapInPandas") == 1, nodes
+    assert nodes.count("Exchange") <= 1, nodes
+    release_checkpoint(cube)
+
+    sc = spark.sparkContext
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    before = set(tracker.getJobIdsForGroup())
+    run_validation(images, checks=tuple(DRIFT_CHECKS), with_stats=False).release()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    stages = set()
+    for jid in set(tracker.getJobIdsForGroup()) - before:
+        for sid in tracker.getJobInfo(jid).stageIds:
+            try:
+                sd = store.lastStageAttempt(sid)
+            except Py4JJavaError:  # skipped, never attempted
+                continue
+            if (sd.schedulingPool() == "drift(fused)"
+                    and sd.status().toString() != "SKIPPED"):
+                stages.add(sid)
+    assert 1 <= len(stages) <= 3, stages
 
 
 def test_registry_looks_up_checks_at_call_time(spark, images, ref_dims, monkeypatch):
