@@ -11,22 +11,21 @@ shape, Spark underneath.
     v.update_data(new_entries_df)   # merge/diff semantics (U1)
     v.last_updated(); v.data(); v.export_data(path)
 
-Single-probe queries run the same distributed cascade on a one-row
-probe DataFrame — semantics identical to the bulk path by construction
-(one code path). The probe is a local relation
-(:func:`~.session.local_frame`): its row travels in the plan and is
-scanned in one JVM task, with no Python worker started to unpickle it.
-The entries dimension is loaded lazily and cached, mirroring the
-reference's throttled ``_load_data`` (Sanctions.pm:29, 321-352):
-reload only when the snapshot path mtime advances.
+A query screens one person, as the reference does, and is answered on
+the driver. The entries dimension is loaded lazily and cached,
+mirroring the reference's throttled ``_load_data`` (Sanctions.pm:29,
+321-352): reload only when the snapshot path mtime advances.
 
 The screening index is prepared once per loaded snapshot, as the
-reference builds its ``_index`` once per ``_load_data``: the token
-index is materialized (``localCheckpoint``) into a
-:class:`~.operators.matcher.ProbeIndex` the first time a query needs
-it, and rebuilt only when ``_load_data`` returns a different frame
-(mtime advance, ``update_data``). A query then plans one aggregation
-around the prepared Columns and runs against the materialized index.
+reference builds its ``_index`` once per ``_load_data``: a
+:class:`~.operators.matcher.ProbeIndex` collects the snapshot's name
+rows and their token postings to the driver the first time a query
+needs it, and is rebuilt only when ``_load_data`` returns a different
+frame (mtime advance, ``update_data``). The probe is a local relation
+(:func:`~.session.local_frame`); :func:`~.operators.matcher.match_probes`
+looks up its candidates in the postings and evaluates the verdict over
+another local relation, which Catalyst folds on the driver, so a warm
+call submits no Spark job.
 """
 
 from __future__ import annotations
@@ -37,14 +36,9 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .operators.matcher import (
-    ProbeIndex,
-    build_name_dim,
-    build_token_index,
-    match_probes,
-)
+from .operators.matcher import ProbeIndex, match_probes
 from .schema import ENTRY_SCHEMA, PROBE_SCHEMA
-from .session import local_frame, release_checkpoint
+from .session import local_frame
 from .sources.synth import synth_entries
 
 IGNORE_OPERATION_INTERVAL = 8 * 60  # Sanctions.pm:29
@@ -91,13 +85,10 @@ class SanctionsValidator:
 
     def _probe_index(self) -> ProbeIndex:
         """The prepared index of the frame ``_load_data`` returns, rebuilt
-        (and the previous one released) only when that frame changes."""
+        (and the previous one dropped) only when that frame changes."""
         entries = self._load_data()
         if entries is not self._index_of:
-            if self._index is not None:
-                release_checkpoint(self._index.table)
-            table = build_token_index(build_name_dim(entries))
-            self._index = ProbeIndex(table.localCheckpoint(eager=True))
+            self._index = ProbeIndex(entries)
             self._index_of = entries
         return self._index
 

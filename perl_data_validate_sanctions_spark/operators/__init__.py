@@ -5,7 +5,6 @@ search, text analysis)."""
 from .matcher import (  # noqa: F401
     ProbeIndex,
     build_name_dim,
-    build_token_index,
     match_captions,
     match_probes,
 )

@@ -5,10 +5,10 @@ Reference lifecycle being reproduced
 (/root/reference/lib/Data/Validate/Sanctions.pm:217-319):
 
 1. J1  candidate retrieval: probe name tokens looked up in an inverted
-   token index, union of hits (Sanctions.pm:253-258). Here: explode the
-   probe token array and broadcast-hash-join the token index — the
-   inverted index IS the join; Catalyst plans a BroadcastHashJoin
-   because the dimension is small.
+   token index, union of hits (Sanctions.pm:253-258). Here:
+   :class:`ProbeIndex` holds the postings (token → name-dimension row
+   ids) in a driver dict built once per snapshot, and each probe row
+   carries its candidate rows into the verdict expression.
 2. J2  fuzzy token-overlap (``_name_matches``, Sanctions.pm:421-437):
    count probe tokens present in the entry name's tokens **with probe
    multiplicity** (a duplicated probe token counts twice — reproduced
@@ -31,12 +31,13 @@ candidates and keep the minimum of (tier, source, name, entry_id) —
 direct-DOB tiers always beat the dob_text fallback tier, matching the
 reference's two-pass structure.
 
-Scale shape (``match_probes``): the only shuffle is the one
-aggregation per probe row, over the probe rows exploded by token and
-left-joined to the broadcast index — no join back to the probe table.
-``match_captions`` shuffles only candidate-bearing rows; ``bytes`` is
-never selected on either path (column pruning keeps it out of the
-scan).
+Scale shape: ``match_probes`` is driver-sized — a screening call
+(one person, as the reference answers one per call) looks up its
+candidates in the driver-held postings and evaluates the verdict over a
+local relation, which Catalyst folds on the driver: no Spark job. Bulk
+screening is ``match_captions`` / ``match_captions_arrow``, which
+shuffle only candidate-bearing rows; ``bytes`` is never selected on
+either path (column pruning keeps it out of the scan).
 """
 
 from __future__ import annotations
@@ -45,11 +46,13 @@ import hashlib
 import pickle
 import threading
 import zlib
+from collections.abc import Callable
 
 from pyspark import Broadcast
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
+from pyspark.sql.types import DataType, StructField, StructType
 
 from ..functions.country import country_code
 from ..functions.dates import date_to_epoch, epoch_year
@@ -66,8 +69,6 @@ from ..session import local_frame
 def _empty(t: str) -> Column:
     return F.array().cast(f"array<{t}>")
 
-
-_DIM_PREFIX = "__e_"
 
 # slot count for the crc32-bucketed document-frequency array the
 # prefix filter shares between the driver-built index and the probe
@@ -100,26 +101,8 @@ def build_name_dim(entries: DataFrame) -> DataFrame:
     )
 
 
-def build_token_index(name_dim: DataFrame) -> DataFrame:
-    """Inverted token index (Sanctions.pm:346-348): token → candidate row.
-    All candidate attributes ride along (prefixed) so the probe join is
-    a single broadcast hash join."""
-    prefixed = name_dim.select(
-        [F.col(c).alias(_DIM_PREFIX + c) for c in name_dim.columns]
-    )
-    return prefixed.select(
-        F.explode_outer(F.array_distinct(F.col(_DIM_PREFIX + "name_tokens"))).alias(
-            "__token"
-        ),
-        *[_DIM_PREFIX + c for c in name_dim.columns],
-    ).filter(F.col("__token").isNotNull())
-
-
-def _e(field: str) -> Column:
-    return F.col(_DIM_PREFIX + field)
-
-
 def _candidate_predicates(
+    e: Callable[[str], Column],
     ptokens: Column,
     pfull: Column,
     dob_provided: Column,
@@ -127,8 +110,10 @@ def _candidate_predicates(
     pyear: Column,
     probe_fields: dict[str, Column],
 ) -> dict[str, Column]:
-    """All per-candidate predicate columns, given probe-side expressions."""
-    ntokens = _e("name_tokens")
+    """All per-candidate predicate columns, given probe-side expressions
+    and ``e``, which maps a name-dimension field to the candidate's
+    value."""
+    ntokens = e("name_tokens")
 
     # J2 — multiplicity-preserving hit count
     n_hits = F.size(F.filter(ptokens, lambda t: F.array_contains(ntokens, t)))
@@ -140,7 +125,7 @@ def _candidate_predicates(
     matched_fields: dict[str, Column] = {}
     for f in OPTIONAL_MATCH_FIELDS:
         p_f = probe_fields[f]
-        e_f = _e(f)
+        e_f = e(f)
         relevant = (
             p_f.isNotNull() & (p_f != "") & e_f.isNotNull() & (F.size(e_f) > 0)
         )
@@ -148,9 +133,9 @@ def _candidate_predicates(
         matched_fields[f] = F.when(relevant, p_f)
 
     # J4/J5 — DOB tiers (epoch checked before year, Sanctions.pm:278)
-    e_epochs = F.coalesce(_e("dob_epoch"), _empty("long"))
-    e_years = F.coalesce(_e("dob_year"), _empty("int"))
-    e_texts = F.coalesce(_e("dob_text"), _empty("string"))
+    e_epochs = F.coalesce(e("dob_epoch"), _empty("long"))
+    e_years = F.coalesce(e("dob_year"), _empty("int"))
+    e_texts = F.coalesce(e("dob_text"), _empty("string"))
     epoch_hit = (
         dob_provided & pepoch.isNotNull() & F.array_contains(e_epochs, pepoch)
     )
@@ -170,7 +155,7 @@ def _candidate_predicates(
         & ~epoch_hit
         & ~year_hit
         & (has_text | no_ey)
-        & (pfull == _e("name_clean_full"))
+        & (pfull == e("name_clean_full"))
     )
 
     comment = F.when(
@@ -178,7 +163,7 @@ def _candidate_predicates(
         F.concat(F.lit("dob raw text: "), F.array_join(e_texts, ", ")),
     )
     matched_args = F.struct(
-        _e("name").alias("name"),
+        e("name").alias("name"),
         *[matched_fields[f].alias(f) for f in OPTIONAL_MATCH_FIELDS],
         F.when(epoch_hit, pepoch).alias("dob_epoch"),
         F.when(year_hit, pyear).alias("dob_year"),
@@ -203,29 +188,36 @@ def _miss_verdict() -> Column:
 
 
 class ProbeIndex:
-    """The screening index of one dimension snapshot, prepared once.
+    """The screening index of one dimension snapshot, held on the driver.
 
-    Holds the broadcast-hinted token index and every Column
-    :func:`match_probes` needs — the probe-side prep (tokens, cleaned
-    full name, DOB epoch/year, country codes), the candidate predicates
-    and the ranked verdict struct — so a call only wires a plan around
-    them. The reference likewise builds its ``_index`` once per
-    ``_load_data`` (Sanctions.pm:321-352, 360-382), not per query.
-    ``table`` is the unhinted token index, for the owner to release."""
+    The snapshot's name-dimension rows are collected once (one job) and
+    kept as tuples, with ``postings``: token → ascending row ids over
+    each row's distinct name tokens — the reference's in-memory
+    ``_index`` (Sanctions.pm:321-352, 360-382), built once per
+    ``_load_data``, not per query. The driver holds one snapshot's name
+    rows (~15.7k for the full feeds). The Columns :func:`match_probes`
+    needs are built here too: probe tokens, probe prep and verdict."""
 
-    def __init__(self, token_index: DataFrame):
-        self.table = token_index
-        self.index = F.broadcast(token_index)
+    def __init__(self, entries: DataFrame):
+        dim = build_name_dim(entries)
+        # through DDL every field and element is nullable: pyarrow will
+        # not cast a nullable field into a non-nullable nested one
+        self.cand_type = DataType.fromDDL(f"array<{dim.schema.simpleString()}>")
+        self.rows = [tuple(r) for r in dim.collect()]
+        self.postings: dict[str, list[int]] = {}
+        tokens_at = dim.columns.index("name_tokens")
+        for i, row in enumerate(self.rows):
+            for t in set(row[tokens_at] or ()):
+                self.postings.setdefault(t, []).append(i)
+
         full_name = process_name(
             F.col("first_name"), F.coalesce(F.col("last_name"), F.lit(""))
         )
-        pepoch = date_to_epoch(F.col("date_of_birth"))
+        self.tokens = clean_name_tokens(full_name).alias("__ptokens")
         self.prep = [
-            clean_name_tokens(full_name).alias("__ptokens"),
             clean_full_name(full_name).alias("__pfull"),
             F.col("date_of_birth").isNotNull().alias("__dob_provided"),
-            pepoch.alias("__pepoch"),
-            epoch_year(pepoch).alias("__pyear"),
+            date_to_epoch(F.col("date_of_birth")).alias("__pepoch"),
         ]
         # probe-side country normalization (Sanctions.pm:235-240):
         # unknown countries become '' which the field check then ignores
@@ -235,36 +227,44 @@ class ProbeIndex:
             if f in ("place_of_birth", "residence", "nationality", "citizen"):
                 p_f = F.when(p_f.isNotNull() & (p_f != ""), country_code(p_f))
             self.prep.append(p_f.alias("__p_" + f))
+        # a projection of its own, so the date_to_epoch tree is not
+        # inlined a second time
+        self.pyear = epoch_year(F.col("__pepoch")).alias("__pyear")
 
-        preds = _candidate_predicates(
-            F.col("__ptokens"),
-            F.col("__pfull"),
-            F.col("__dob_provided"),
-            F.col("__pepoch"),
-            F.col("__pyear"),
-            {f: F.col("__p_" + f) for f in OPTIONAL_MATCH_FIELDS},
-        )
-        verdict = F.struct(
-            F.lit(1).alias("matched"),
-            _e("source").alias("list"),
-            preds["matched_args"].alias("matched_args"),
-            preds["comment"].alias("comment"),
-        )
-        ranked = F.struct(
-            preds["tier"].alias("tier"),
-            _e("source").alias("source"),
-            _e("name").alias("name"),
-            _e("entry_id").alias("entry_id"),
-            verdict.alias("verdict"),
-        )
-        self.best = F.min(F.when(preds["candidate_ok"], ranked)).alias("__best")
-        self.verdict = F.coalesce(F.col("__best.verdict"), _miss_verdict()).alias(
+        def ranked(c: Column) -> Column:
+            preds = _candidate_predicates(
+                lambda f: c[f],
+                F.col("__ptokens"),
+                F.col("__pfull"),
+                F.col("__dob_provided"),
+                F.col("__pepoch"),
+                F.col("__pyear"),
+                {f: F.col("__p_" + f) for f in OPTIONAL_MATCH_FIELDS},
+            )
+            verdict = F.struct(
+                F.lit(1).alias("matched"),
+                c["source"].alias("list"),
+                preds["matched_args"].alias("matched_args"),
+                preds["comment"].alias("comment"),
+            )
+            return F.when(preds["candidate_ok"], F.struct(
+                preds["tier"].alias("tier"),
+                c["source"].alias("source"),
+                c["name"].alias("name"),
+                c["entry_id"].alias("entry_id"),
+                verdict.alias("verdict"),
+            ))
+
+        # array_min skips the nulls of failed candidates
+        best = F.array_min(F.transform(F.col("__cands"), ranked))
+        self.verdict = F.coalesce(best.getField("verdict"), _miss_verdict()).alias(
             "verdict"
         )
 
-    @classmethod
-    def of(cls, entries: DataFrame) -> ProbeIndex:
-        return cls(build_token_index(build_name_dim(entries)))
+    def candidates(self, ptokens: list[str]) -> list[tuple]:
+        """The name rows sharing a token with ``ptokens``, in row order."""
+        ids = {i for t in set(ptokens) for i in self.postings.get(t, ())}
+        return [self.rows[i] for i in sorted(ids)]
 
 
 class DimSnapshot:
@@ -335,29 +335,23 @@ def match_probes(
     table plus a ``verdict`` struct column (VERDICT_SCHEMA). ``entries``
     is the entries DataFrame or a :class:`ProbeIndex` prepared from it.
 
-    One verdict per probe ROW, as the reference verdicts per call: each
-    row carries its own key ``__rk`` and the whole row (``__row``)
-    through explode → left broadcast join → one aggregation on
-    ``__rk``, so rows sharing a ``probe_id`` never take each other's
-    verdict and a row with no candidate (or no name token) comes out
-    once, as a miss.
-    CAVEAT (same as :func:`_with_physical_row_key`'s fallback):
-    ``__rk`` is ``monotonically_increasing_id``, which is not stable
-    if a probe-side map task is recomputed after some reducers fetched
-    its output, which can duplicate or drop verdict rows of that task."""
-    idx = entries if isinstance(entries, ProbeIndex) else ProbeIndex.of(entries)
-    prepared = probes.select(
-        F.monotonically_increasing_id().alias("__rk"),
-        F.struct(F.col("*")).alias("__row"),
-        *idx.prep,
+    One verdict per probe ROW, as the reference verdicts per call. The
+    probe table must be driver-sized: its rows are collected with their
+    tokens, each gets its candidate rows from the postings, and the
+    verdict is evaluated over one local relation of (probe row, tokens,
+    candidates). Over a local probe frame (the API's one-row probe)
+    Catalyst folds both projections on the driver, so the call submits
+    no Spark job. Bulk screening belongs to :func:`match_captions`."""
+    idx = entries if isinstance(entries, ProbeIndex) else ProbeIndex(entries)
+    tokenized = probes.select("*", idx.tokens)
+    rows = [(*r, idx.candidates(r["__ptokens"])) for r in tokenized.collect()]
+    schema = StructType(tokenized.schema.fields + [StructField("__cands", idx.cand_type)])
+    return (
+        local_frame(probes.sparkSession, rows, schema)
+        .select("*", *idx.prep)
+        .select("*", idx.pyear)
+        .select(*probes.columns, idx.verdict)
     )
-    best = (
-        prepared.withColumn("__token", F.explode_outer("__ptokens"))
-        .join(idx.index, "__token", "left")
-        .groupBy("__rk")
-        .agg(F.first("__row").alias("__row"), idx.best)
-    )
-    return best.select("__row.*", idx.verdict)
 
 
 def _with_physical_row_key(
@@ -380,8 +374,7 @@ def _with_physical_row_key(
     output, recomputed rows get different ids (SPARK-23207 class),
     which can duplicate/drop verdict rows for physical duplicates. On
     a cluster, feed file-backed frames; the fallback exists for local
-    ephemeral inputs only. :func:`match_probes` keys its probe rows the
-    same way (``__rk``) and carries the same caveat.
+    ephemeral inputs only.
     """
     cols = [F.col(id_col).alias("__pid"), F.col(caption_col)]
     # inputFiles() pre-filter: in-memory/synthetic frames have no file

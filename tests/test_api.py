@@ -34,36 +34,22 @@ def test_keyword_api_verdict_shape(validator):
 
 
 @pytest.mark.parametrize("arrow", ["true", "false"])
-def test_screening_probe_is_a_local_scan(spark, validator, monkeypatch, arrow):
-    """The one-row probe is scanned from the plan itself (a
-    ``LocalTableScan``), whatever the Arrow conf says: a list-built probe
-    plans as a second ``Scan ExistingRDD`` over a PythonRDD, and every
-    call then starts Python workers to unpickle one row. The only RDD
-    scan left is the checkpointed token index."""
-    from perl_data_validate_sanctions_spark import api
-
-    match_probes, screened = api.match_probes, []
-
-    def spy(*args, **kwargs):
-        screened.append(match_probes(*args, **kwargs))
-        return screened[-1]
-
-    monkeypatch.setattr(api, "match_probes", spy)
+def test_warm_screening_call_submits_no_job(spark, validator, jobs_of, arrow):
+    """A warm call is answered on the driver, whatever the Arrow conf
+    says: the probe and its candidates are local relations that
+    Catalyst folds, so no Spark job runs. A list-built probe, or a join
+    against a Spark-side index, would submit jobs on every call."""
     conf = "spark.sql.execution.arrow.pyspark.enabled"
     before = spark.conf.get(conf)
     spark.conf.set(conf, arrow)
     try:
-        assert validator.get_sanctioned_info("Zaki", "Ahmad", "1999-01-05")[
-            "matched"] == 1
-        (frame,) = screened
-        frame.collect()
-        plan = frame._jdf.queryExecution().executedPlan().toString()
+        validator.get_sanctioned_info("nobody", "anywhere")  # builds the index
+        got, jobs = jobs_of(
+            lambda: validator.get_sanctioned_info("Zaki", "Ahmad", "1999-01-05"))
     finally:
         spark.conf.set(conf, before)
-    final = plan.split("== Initial Plan ==")[0]
-    assert "== Final Plan ==" in final, plan
-    assert "LocalTableScan" in final, final
-    assert final.count("Scan ExistingRDD") == 1, final
+    assert got["matched"] == 1 and got["list"] == "EU-Sanctions"
+    assert jobs == 0
 
 
 def test_update_data_and_export(spark, tmp_path_factory):
@@ -87,19 +73,19 @@ def test_update_data_and_export(spark, tmp_path_factory):
     assert spark.read.parquet(out).count() == v.data().count()
 
 
-def _cached_rdds(spark) -> set[int]:
-    return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
-
-
-def _index_rdd(v) -> int:
-    return v._index.table._jdf.queryExecution().logical().rdd().id()
-
-
 def test_new_snapshot_invalidates_cached_index(spark, tmp_path_factory):
     """The prepared screening index belongs to one loaded snapshot: it
     is reused while the snapshot stands, rebuilt after a reload through
-    the mtime path and after update_data, and the old one is released.
+    the mtime path and after update_data, and the old one is dropped.
     A stale index would keep answering from the dropped data."""
+    import gc
+    import weakref
+
+    def assert_replaced(old):
+        assert v._index is not old()
+        gc.collect()
+        assert old() is None, "the validator still holds the old index"
+
     path = str(tmp_path_factory.mktemp("idx") / "entries.parquet")
     base = synth_entries(spark, n_extra=0)
     base.write.parquet(path)
@@ -119,21 +105,22 @@ def test_new_snapshot_invalidates_cached_index(spark, tmp_path_factory):
     base.filter(F.col("source") != "UNSC-Sanctions").unionByName(
         newcomer
     ).write.mode("overwrite").parquet(path)
-    old_rdd = _index_rdd(v)
+    old = weakref.ref(first)
+    del first
     v._last_load = 0  # force the reload past the throttle
     assert v.is_sanctioned("Quirin", "Zebedee") == 1
     assert v.is_sanctioned("Hamza") == 0
-    assert old_rdd not in _cached_rdds(spark)
+    assert_replaced(old)
 
     # update_data path: the original UNSC-Sanctions entries come back
-    old_rdd = _index_rdd(v)
+    old = weakref.ref(v._index)
     decisions = v.update_data(base.filter(F.col("source") == "UNSC-Sanctions"))
     assert [r["source"] for r in decisions.collect() if r["take_new"]] == [
         "UNSC-Sanctions"
     ]
     assert v.is_sanctioned("Hamza") == 1
     assert v.is_sanctioned("Quirin", "Zebedee") == 0
-    assert old_rdd not in _cached_rdds(spark)
+    assert_replaced(old)
 
 
 def test_last_updated_roundtrip_and_source_status(spark, tmp_path_factory):

@@ -14,8 +14,6 @@ from pyspark.sql import functions as F
 
 from perl_data_validate_sanctions_spark.operators.matcher import (
     ProbeIndex,
-    build_name_dim,
-    build_token_index,
     match_captions,
     match_probes,
 )
@@ -237,22 +235,85 @@ def test_match_probes_one_verdict_per_row(spark):
     ])
 
 
-def test_probe_plan_shape(spark, tmp_path):
-    """Pre-AQE physical plan of one screening against a prepared index:
-    the probe side joins the broadcast index and is aggregated once —
-    no sort-merge join back to the probe table, one hash exchange, and
-    no rescan of the snapshot the index was built from."""
-    path = str(tmp_path / "entries.parquet")
-    synth_entries(spark, n_extra=0).write.parquet(path)
-    table = build_token_index(build_name_dim(spark.read.parquet(path)))
-    index = ProbeIndex(table.localCheckpoint(eager=True))
-    out = match_probes(_probe_rows(spark, ("p", "Bandit", "Outlaw")), index)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" not in plan, plan
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert plan.count("BroadcastExchange") == 1, plan
-    assert "FileScan" not in plan, plan
-    assert out.collect()[0]["verdict"]["list"] == "OFAC-Consolidated"
+def test_local_probe_table_is_answered_on_the_driver(spark, jobs_of):
+    """A local probe table against a prepared index runs no Spark job:
+    the candidates come from the driver-held postings, and Catalyst
+    folds both projections, so the executed plan is one
+    ``LocalTableScan`` of the verdicts."""
+    from perl_data_validate_sanctions_spark.schema import PROBE_SCHEMA
+    from perl_data_validate_sanctions_spark.session import local_frame
+
+    index = ProbeIndex(synth_entries(spark, n_extra=0))
+    cols = PROBE_SCHEMA.fieldNames()
+    probes = local_frame(spark, [
+        tuple({"probe_id": pid, "first_name": first, "last_name": last}.get(c)
+              for c in cols)
+        for pid, first, last in (("a", "Bandit", "Outlaw"), ("b", "Nora", "Quinn"),
+                                 ("c", "Hamza", None))
+    ], PROBE_SCHEMA)
+    out, jobs = jobs_of(lambda: match_probes(probes, index))
+    rows, more_jobs = jobs_of(out.collect)
+    assert jobs == more_jobs == 0
+    assert {r["probe_id"]: r["verdict"]["list"] for r in rows} == {
+        "a": "OFAC-Consolidated", "b": None, "c": "UNSC-Sanctions"}
+    plan = out._jdf.queryExecution().executedPlan()
+    assert plan.nodeName() == "LocalTableScan", plan.toString()
+    assert plan.children().isEmpty(), plan.toString()
+
+
+@pytest.mark.parametrize("fold", [True, False], ids=["folded", "task"])
+def test_verdicts_do_not_depend_on_the_evaluation_path(spark, verdicts, jobs_of, fold):
+    """The golden verdicts are the same whether Catalyst folds the
+    verdict on the driver or, with ``ConvertToLocalRelation`` excluded,
+    generated code evaluates it in a task, under ANSI on and off and in
+    any session time zone."""
+    probes = synth_probes(spark)
+    entries = synth_entries(spark, n_extra=50)
+    keys = ("spark.sql.optimizer.excludedRules", "spark.sql.ansi.enabled",
+            "spark.sql.session.timeZone")
+    before = {k: spark.conf.get(k, None) for k in keys}
+    rule = "" if fold else "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"
+    try:
+        spark.conf.set(keys[0], rule)
+        for ansi in ("true", "false"):
+            for tz in ("America/New_York", "UTC"):
+                spark.conf.set(keys[1], ansi)
+                spark.conf.set(keys[2], tz)
+                out = match_probes(probes, entries)
+                rows, jobs = jobs_of(lambda: out.select("probe_id", "verdict").collect())
+                assert (jobs == 0) == fold, (ansi, tz, jobs)
+                got = {r["probe_id"]: r["verdict"] for r in rows}
+                assert got == verdicts, (ansi, tz)
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_parquet_probe_table_gets_one_verdict_per_row(spark, verdicts, tmp_path):
+    """A probe table read from files (a scan, not a local relation) is
+    collected with its tokens and answered like a local one."""
+    path = str(tmp_path / "probes.parquet")
+    synth_probes(spark).write.parquet(path)
+    rows = match_probes(spark.read.parquet(path), synth_entries(spark, n_extra=50)).collect()
+    assert len(rows) == len(verdicts)
+    assert {r["probe_id"]: r["verdict"] for r in rows} == verdicts
+
+
+def test_hot_token_probe(spark):
+    """Digits are stripped from name tokens, so every generated alias
+    "<First> Genersson<i>" carries the token GENERSSON: a "Nora
+    Genersson" probe has the whole generated dimension as candidates
+    and matches the least (source, name) among the Nora rows."""
+    n_extra = 2000
+    index = ProbeIndex(synth_entries(spark, n_extra=n_extra))
+    assert len(index.candidates(["NORA", "GENERSSON"])) == n_extra
+    (row,) = match_probes(_probe_rows(spark, ("hot", "Nora", "Genersson")), index).collect()
+    v = row["verdict"]
+    assert (v["matched"], v["list"], _args(v)) == (
+        1, "HMT-Sanctions", {"name": "Nora Genersson1130"})
 
 
 def test_caption_match_native_and_arrow_agree(spark):
