@@ -15,9 +15,12 @@ integer cents so value hashes can't drift on double formatting.
 from __future__ import annotations
 
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from perl_data_validate_sanctions_spark.session import local_frame
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
@@ -67,7 +70,7 @@ def _doc_entries(spark: SparkSession) -> DataFrame:
         (eid, src, names) + (None,) * 10
         for eid, src, names in DOC_ENTRY_ROWS
     ]
-    return spark.createDataFrame(rows, ENTRY_SCHEMA)
+    return local_frame(spark, rows, ENTRY_SCHEMA)
 
 
 # ---------------------------------------------------------------- queries ---
@@ -297,7 +300,7 @@ def q_dob_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DOB classification truth table (epoch / year-expansion / text)."""
     from perl_data_validate_sanctions_spark.functions.dates import classify_dob
 
-    df = spark.createDataFrame([(s,) for s in DOB_PROBES], "raw string")
+    df = local_frame(spark, [(s,) for s in DOB_PROBES], "raw string")
     c = classify_dob("raw")
     return df.select(
         "raw",
@@ -325,7 +328,7 @@ def q_country_code(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Country normalization (P3/J8) over a pinned probe list."""
     from perl_data_validate_sanctions_spark.functions.country import country_code
 
-    df = spark.createDataFrame([(s,) for s in COUNTRY_PROBES], "value string")
+    df = local_frame(spark, [(s,) for s in COUNTRY_PROBES], "value string")
     return df.select("value", country_code("value").alias("code"))
 
 
@@ -1078,7 +1081,7 @@ def q_ivf_ann_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_pipeline_ops.py::test_ivf_indexed_partition_pruning).
     Full probe here so results ≡ brute force and the exact-cosine SQL
     is the oracle; the index is rewritten per call (500-row table) into
-    the repo-local bench cache."""
+    the bench cache of the checkout this file lives in."""
     import os
 
     from perl_data_validate_sanctions_spark.operators.similarity import (
@@ -1090,7 +1093,7 @@ def q_ivf_ann_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     centroids = train_ivf_centroids(emb, n_centroids=8, dim=64, iterations=1)
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    path = f"/root/repo/.bench_cache/ivf_index_{sf_tag}.parquet"
+    path = str(Path(__file__).parent / ".bench_cache" / f"ivf_index_{sf_tag}.parquet")
     write_ivf_index(emb, centroids, path)
     queries = emb.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
@@ -1184,7 +1187,7 @@ def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         (iid, bytearray(_img_payload(fmt, w, h, seed, amp)))
         for iid, fmt, w, h, seed, amp in IMG_FEATURE_PARAMS
     ]
-    df = spark.createDataFrame(rows, "image_id string, bytes binary")
+    df = local_frame(spark, rows, "image_id string, bytes binary")
     out = extract_image_features(df)
     return out.select(
         "image_id", "fmt", "w", "h",
@@ -1232,7 +1235,7 @@ def q_resize_images(spark: SparkSession, sf_dir: str) -> DataFrame:
         (iid, bytearray(_img_payload(fmt, w, h, seed, amp)))
         for iid, fmt, w, h, seed, amp in IMG_FEATURE_PARAMS
     ]
-    df = spark.createDataFrame(rows, "image_id string, bytes binary")
+    df = local_frame(spark, rows, "image_id string, bytes binary")
     out = resize_images(df, target_w=8, target_h=6)
     return out.select(
         "image_id", "w", "h", F.md5("thumb").alias("thumb_md5")
@@ -1277,7 +1280,7 @@ def q_sample_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         (iid, bytearray(_img_payload(fmt, w, h, seed, amp)))
         for iid, fmt, w, h, seed, amp in IMG_FEATURE_PARAMS
     ]
-    df = spark.createDataFrame(rows, "image_id string, bytes binary")
+    df = local_frame(spark, rows, "image_id string, bytes binary")
     out = sample_frames(df, every_n=4, n_frames=16)
     return out.select(
         "image_id", "frame_idx",
@@ -1341,7 +1344,7 @@ def q_real_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         (rid, bytearray(_real_payload(fmt, w, h, seed)))
         for rid, fmt, w, h, seed in REAL_FEATURE_PARAMS
     ]
-    df = spark.createDataFrame(rows, "image_id string, bytes binary")
+    df = local_frame(spark, rows, "image_id string, bytes binary")
     out = extract_image_features(df)
     return out.select(
         "image_id", "fmt", "w", "h",
@@ -1404,7 +1407,7 @@ def q_webp_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         (rid, bytearray(webp.encode_webp_gray(codec.render(seed, w, h))))
         for rid, w, h, seed in WEBP_FEATURE_PARAMS
     ]
-    df = spark.createDataFrame(rows, "image_id string, bytes binary")
+    df = local_frame(spark, rows, "image_id string, bytes binary")
     return extract_image_features(df).select(
         "image_id", "fmt", "w", "h",
         F.round("mean_luma", 4).alias("mean_luma"),
@@ -1468,7 +1471,7 @@ def q_webp_lossy_decode_features(spark: SparkSession,
             codec.render(seed, w, h), quality=95)))
         for rid, w, h, seed in WEBP_LOSSY_FEATURE_PARAMS
     ]
-    df = spark.createDataFrame(rows, "image_id string, bytes binary")
+    df = local_frame(spark, rows, "image_id string, bytes binary")
     return extract_image_features(df).select(
         "image_id", "fmt", "w", "h",
         F.round("mean_luma", 4).alias("mean_luma"),
@@ -1600,7 +1603,7 @@ def q_phash_64(spark: SparkSession, sf_dir: str) -> DataFrame:
         (rid, bytearray(_phash_payload(kind, w, h, seed)))
         for rid, kind, w, h, seed in PHASH_PARAMS
     ]
-    df = spark.createDataFrame(rows, "image_id string, bytes binary")
+    df = local_frame(spark, rows, "image_id string, bytes binary")
     return compute_phash(df)
 
 
@@ -1643,9 +1646,7 @@ def q_phash_column_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             stored = u - (1 << 64) if u >= (1 << 63) else u
         rows.append((rid, bytearray(_phash_payload(kind, w, h, seed)),
                      stored))
-    df = spark.createDataFrame(
-        rows, "image_id string, bytes binary, phash long"
-    )
+    df = local_frame(spark, rows, "image_id string, bytes binary, phash long")
     return phash_column_violations(df, F.lit(0)).select(
         "image_id", "column", "detail"
     )
@@ -1695,7 +1696,7 @@ def q_phash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         (rid, bytearray(_phash_payload(kind, w, h, seed)))
         for rid, kind, w, h, seed in PHASH_NEAR_DUP_PARAMS
     ]
-    df = spark.createDataFrame(rows, "image_id string, bytes binary")
+    df = local_frame(spark, rows, "image_id string, bytes binary")
     return phash_near_dup_pairs(df, max_hamming=6).select(
         "id_a", "id_b", F.col("hamming").cast("long").alias("hamming")
     )
@@ -1751,7 +1752,7 @@ def q_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         (vid, bytearray(_video_clip(seed, n, fps)))
         for vid, seed, n, fps in VIDEO_SAMPLE_PARAMS
     ]
-    df = spark.createDataFrame(rows, "image_id string, bytes binary")
+    df = local_frame(spark, rows, "image_id string, bytes binary")
     out = sample_frames(df, every_n=2, n_frames=8)
     return out.select(
         F.col("image_id").alias("video_id"),
@@ -1813,7 +1814,7 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         (aid, bytearray(wav.encode_wav_pcm16(_audio_clip(seed, n), rate)))
         for aid, seed, n, rate in AUDIO_FEATURE_PARAMS
     ]
-    df = spark.createDataFrame(rows, "audio_id string, bytes binary")
+    df = local_frame(spark, rows, "audio_id string, bytes binary")
     out = extract_audio_features(df)
     return out.select(
         "audio_id", "rate", "n_samples",
@@ -2047,7 +2048,8 @@ def q_validate_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert sum(r["n_rows"] for r in verdicts) == images.count()
     finally:
         _shutil.rmtree(sink, ignore_errors=True)
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [(r["check"], r["partition_id"], r["n_violations"]) for r in rollup],
         "check string, partition_id int, n_violations long",
     )

@@ -792,16 +792,17 @@ def main() -> None:
 
         # single-node reference-shape proxy: the reference is a single-
         # threaded in-process engine (in-memory inverted token index +
-        # per-probe loop, Sanctions.pm:253-315); _MatcherIndex reproduces
+        # per-probe loop, Sanctions.pm:253-315); NameIndex.best reproduces
         # exactly that shape in one Python thread — the honest stand-in
         # for "the reference's single-node throughput at the same scale"
         # (the Perl library itself can't run here: CPAN deps absent)
         from perl_data_validate_sanctions_spark.operators.matcher import (
+            NameIndex,
+            _ranked,
             build_name_dim,
         )
         from perl_data_validate_sanctions_spark.operators.matcher_arrow import (
             _clean_tokens_py,
-            _MatcherIndex,
         )
 
         caps = [
@@ -809,18 +810,15 @@ def main() -> None:
             for r in images.select("caption").collect()
             if r["caption"]
         ]
-        dim_rows = [
-            r.asDict()
-            for r in build_name_dim(entries)
+        index = NameIndex(_ranked(
+            build_name_dim(entries)
             .select("entry_id", "source", "name", "name_tokens")
-            .collect()
-        ]
-        index = _MatcherIndex(dim_rows)
+        ))
         t0 = time.time()
         hits = sum(
             1
             for c in caps
-            if index.match_caption_tokens(_clean_tokens_py(c)) is not None
+            if index.best(_clean_tokens_py(c)) is not None
         )
         t_single = time.time() - t0
         timings["single_node_reference_proxy_match"] = round(t_single, 3)

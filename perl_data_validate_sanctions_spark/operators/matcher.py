@@ -6,9 +6,10 @@ Reference lifecycle being reproduced
 
 1. J1  candidate retrieval: probe name tokens looked up in an inverted
    token index, union of hits (Sanctions.pm:253-258). Here:
-   :class:`ProbeIndex` holds the postings (token → name-dimension row
-   ids) in a driver dict built once per snapshot, and each probe row
-   carries its candidate rows into the verdict expression.
+   :class:`NameIndex` holds the postings (token → name-dimension ranks)
+   on the driver, built once per snapshot and read by all three
+   matchers; each probe row carries its candidate rows into the verdict
+   expression.
 2. J2  fuzzy token-overlap (``_name_matches``, Sanctions.pm:421-437):
    count probe tokens present in the entry name's tokens **with probe
    multiplicity** (a duplicated probe token counts twice — reproduced
@@ -42,14 +43,14 @@ either path (column pruning keeps it out of the scan).
 
 from __future__ import annotations
 
-import hashlib
-import pickle
+import sys
 import threading
 import zlib
 from collections.abc import Callable
+from uuid import uuid4
 
 from pyspark import Broadcast
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 from pyspark.sql.types import DataType, StructField, StructType
@@ -187,28 +188,142 @@ def _miss_verdict() -> Column:
     )
 
 
+def _ranked(dim: DataFrame) -> list[Row]:
+    """The name rows that have a token, collected (one job) and sorted
+    by (source, name, entry_id): a row's position is its rank."""
+    rows = [r for r in dim.collect() if r["name_tokens"]]
+    rows.sort(key=lambda r: (r["source"], r["name"], r["entry_id"]))
+    return rows
+
+
+class NameIndex:
+    """The token index of one dimension snapshot — the reference's
+    in-memory ``_index`` (Sanctions.pm:321-352, 346-348), built once per
+    ``_load_data`` on the driver from :func:`_ranked` rows. Every reader
+    (the probe screen, the native join, the Arrow workers) reads it.
+
+    Ranking: the rank is the row's position in (source, name, entry_id)
+    order (Python str comparison = code-point order = Spark's UTF8-binary
+    string order), so the caption verdict reduction is ``min(rank)``, a
+    pure-int aggregate that plans as HashAggregate.
+
+    DF cap (the full-dimension fan-out fix): for every name with ≥2
+    distinct tokens, the single token of highest (df_eff, token) is its
+    ``dropped`` token and goes into ``drops`` instead of ``kept`` — the
+    prefix-filter bound for an overlap-≥2 predicate: a probe sharing ≥2
+    distinct tokens with a name still retrieves it through a kept token.
+    High-DF tokens ("AL", "MOHAMMED", …) are the dropped token of most
+    names containing them, so the worst posting lists shrink by orders
+    of magnitude. The two pair classes with possibly no kept hit —
+    single-token probes (any hit matches) and a probe token duplicated
+    ≥2× equal to the dropped token (n_hits ≥ 2 from it alone) — are
+    rescued by also reading the dropped postings; both match
+    unconditionally (see :func:`match_captions`).
+
+    ``df_eff(t) = df_arr[crc32(t) % _DF_SLOTS]`` is the document
+    frequency with slot collisions folded in (max over the slot): the
+    native probe side reads ``df_arr`` as an array literal, so both
+    sides share one exact global (df_eff, token) order. A collision can
+    only make a name drop a slightly-less-common token. ``single`` holds
+    the postings of names of raw size 1: a probe's own dropped token
+    reads only those (any shared token matches them)."""
+
+    def __init__(self, rows: list[Row]):
+        # per rank: distinct tokens (sorted), RAW token count (the
+        # min-size rule counts duplicates, Sanctions.pm:430), (source,
+        # name). Interned, so pickle writes each token and source once.
+        self.tokens = [tuple(sorted({sys.intern(t) for t in r["name_tokens"]}))
+                       for r in rows]
+        self.nsize = [len(r["name_tokens"]) for r in rows]
+        self.meta = [(sys.intern(r["source"]), r["name"]) for r in rows]
+        df: dict[str, int] = {}
+        for ts in self.tokens:
+            for t in ts:
+                df[t] = df.get(t, 0) + 1
+        self.df_arr = [0] * _DF_SLOTS
+        for t, n in df.items():
+            slot = zlib.crc32(t.encode()) % _DF_SLOTS
+            self.df_arr[slot] = max(self.df_arr[slot], n)
+        self.df_eff = {t: self.df_arr[zlib.crc32(t.encode()) % _DF_SLOTS] for t in df}
+        self.dropped: list[str | None] = []
+        self.kept: dict[str, list[int]] = {}
+        self.drops: dict[str, list[int]] = {}
+        self.single: dict[str, list[int]] = {}
+        for rank, ts in enumerate(self.tokens):
+            drop = max(ts, key=lambda t: (self.df_eff[t], t)) if len(ts) >= 2 else None
+            self.dropped.append(drop)
+            for t in ts:
+                (self.drops if t == drop else self.kept).setdefault(t, []).append(rank)
+            if self.nsize[rank] == 1:
+                self.single.setdefault(ts[0], []).append(rank)
+
+    def sharing(self, ptokens: list[str]) -> list[int]:
+        """The ranks of the names sharing a token with ``ptokens`` (J1),
+        ascending."""
+        ranks: set[int] = set()
+        for t in set(ptokens):
+            ranks.update(self.kept.get(t, ()))
+            ranks.update(self.drops.get(t, ()))
+        return sorted(ranks)
+
+    def index_rows(self) -> list[tuple]:
+        """The native join's build side: one ``(token, rank, nsize, keep,
+        dropped, name_tokens)`` row per distinct token of each name."""
+        return [
+            (t, rank, self.nsize[rank], t != drop, drop, list(ts))
+            for rank, (ts, drop) in enumerate(zip(self.tokens, self.dropped))
+            for t in ts
+        ]
+
+    def best(self, ptokens: list[str]) -> tuple[str, str] | None:
+        """J1 + J2 for a caption: the (source, name) of the least-ranked
+        matching name, or None — the native path's ``min(rank)``.
+
+        Candidates follow the native join's both-sides prefix filter:
+        the probe's own max-(df_eff, token) token reads only the
+        single-token names; rescue tokens (a single-token probe's token,
+        tokens duplicated ≥2×) read every posting. The per-candidate
+        predicate stays exact."""
+        distinct = set(ptokens)
+        ranks: set[int] = set()
+        rescue = distinct
+        if len(ptokens) > 1:
+            pdrop = max(distinct, key=lambda t: (self.df_eff.get(t, 0), t))
+            for t in distinct - {pdrop}:
+                ranks.update(self.kept.get(t, ()))
+            ranks.update(self.single.get(pdrop, ()))
+            rescue = ({t for t in distinct if ptokens.count(t) >= 2}
+                      if len(distinct) < len(ptokens) else set())
+        for t in rescue:
+            ranks.update(self.kept.get(t, ()))
+            ranks.update(self.drops.get(t, ()))
+        n = len(ptokens)
+        for rank in sorted(ranks):
+            ts = self.tokens[rank]
+            hits = sum(1 for t in ptokens if t in ts)  # probe multiplicity
+            if hits > 1 or (hits == 1 and min(n, self.nsize[rank]) == 1):
+                return self.meta[rank]
+        return None
+
+
 class ProbeIndex:
     """The screening index of one dimension snapshot, held on the driver.
 
-    The snapshot's name-dimension rows are collected once (one job) and
-    kept as tuples, with ``postings``: token → ascending row ids over
-    each row's distinct name tokens — the reference's in-memory
-    ``_index`` (Sanctions.pm:321-352, 360-382), built once per
-    ``_load_data``, not per query. The driver holds one snapshot's name
-    rows (~15.7k for the full feeds). The Columns :func:`match_probes`
-    needs are built here too: probe tokens, probe prep and verdict."""
+    The snapshot's name-dimension rows are collected once (one job),
+    ranked and kept as tuples beside their :class:`NameIndex`, built
+    once per ``_load_data``, not per query. The driver holds one
+    snapshot's name rows (~15.7k for the full feeds). The Columns
+    :func:`match_probes` needs are built here too: probe tokens, probe
+    prep and verdict."""
 
     def __init__(self, entries: DataFrame):
         dim = build_name_dim(entries)
         # through DDL every field and element is nullable: pyarrow will
         # not cast a nullable field into a non-nullable nested one
         self.cand_type = DataType.fromDDL(f"array<{dim.schema.simpleString()}>")
-        self.rows = [tuple(r) for r in dim.collect()]
-        self.postings: dict[str, list[int]] = {}
-        tokens_at = dim.columns.index("name_tokens")
-        for i, row in enumerate(self.rows):
-            for t in set(row[tokens_at] or ()):
-                self.postings.setdefault(t, []).append(i)
+        rows = _ranked(dim)
+        self.names = NameIndex(rows)
+        self.rows = [tuple(r) for r in rows]
 
         full_name = process_name(
             F.col("first_name"), F.coalesce(F.col("last_name"), F.lit(""))
@@ -262,20 +377,18 @@ class ProbeIndex:
         )
 
     def candidates(self, ptokens: list[str]) -> list[tuple]:
-        """The name rows sharing a token with ``ptokens``, in row order."""
-        ids = {i for t in set(ptokens) for i in self.postings.get(t, ())}
-        return [self.rows[i] for i in sorted(ids)]
+        """The name rows sharing a token with ``ptokens``, in rank order."""
+        return [self.rows[i] for i in self.names.sharing(ptokens)]
 
 
 class DimSnapshot:
     """What the caption screen derives from one entries frame, each part
     built once, on first use: the entry count (the ``"auto"`` rule), the
-    collected dimension rows, their broadcast and content key (Arrow)
-    and :func:`_caption_index` (native) — as the reference builds its
-    ``_index`` once per ``_load_data`` (Sanctions.pm:321-352). One slot,
-    keyed on the frame's IDENTITY: :meth:`of` with another frame
-    releases the held snapshot and destroys its broadcast, so a plan
-    built on it fails when it runs."""
+    :class:`NameIndex` (native) and its broadcast (Arrow) — as the
+    reference builds its ``_index`` once per ``_load_data``
+    (Sanctions.pm:321-352). One slot, keyed on the frame's IDENTITY:
+    :meth:`of` with another frame releases the held snapshot and
+    destroys its broadcast, so a plan built on it fails when it runs."""
 
     _held: DimSnapshot | None = None
     _lock = threading.RLock()
@@ -304,19 +417,17 @@ class DimSnapshot:
     def count(self) -> int:
         return self._part("count", self.entries.count)
 
-    def rows(self) -> list[dict]:
-        return self._part("rows", lambda: [
-            r.asDict() for r in build_name_dim(self.entries)
-            .select("entry_id", "source", "name", "name_tokens").collect()])
+    def index(self) -> NameIndex:
+        return self._part("index", lambda: NameIndex(_ranked(
+            build_name_dim(self.entries)
+            .select("entry_id", "source", "name", "name_tokens"))))
 
     def broadcast(self) -> tuple[Broadcast, str]:
-        """The rows as one broadcast, and their sha1 (the worker index key)."""
+        """The index as one broadcast, and the key a worker caches it
+        under: minted here, as a worker-side Broadcast has no ``id``."""
         return self._part("broadcast", lambda: (
-            self.entries.sparkSession.sparkContext.broadcast(self.rows()),
-            hashlib.sha1(pickle.dumps(self.rows())).hexdigest()))
-
-    def caption_index(self) -> tuple[list[tuple], list[tuple], list[int]]:
-        return self._part("caption_index", lambda: _caption_index(self.rows()))
+            self.entries.sparkSession.sparkContext.broadcast(self.index()),
+            uuid4().hex))
 
     def release(self) -> None:
         with self._lock:
@@ -433,79 +544,6 @@ def _with_physical_row_key(
     )
 
 
-def _caption_index(rows: list[dict]):
-    """Driver-side build of the caption-path token index from the
-    collected name DIMENSION rows (:meth:`DimSnapshot.rows` —
-    broadcast-scale by definition; the reference holds exactly this in
-    process memory as its ``_index`` multimap, Sanctions.pm:346-348):
-    rank them, and apply the prefix-filter document-frequency cap.
-
-    Ranking: rows sorted by (source, name, entry_id) get a dense int
-    ``__rank`` whose numeric order IS the lexicographic order the old
-    ``min(struct(source, name, entry_id))`` reduction used (Python str
-    comparison = code-point order = Spark's UTF8-binary string order) —
-    so the verdict reduction becomes ``min(__rank)``, a pure-int
-    aggregate that plans as HashAggregate (struct/string aggregation
-    buffers force SortAggregate).
-
-    DF cap (the full-dimension fan-out fix): for every name with ≥2
-    distinct tokens, the single highest-document-frequency token (ties
-    by token string) is marked ``keep = false`` — the prefix-filter
-    bound for an overlap-≥2 predicate: a probe sharing ≥2 *distinct*
-    tokens with a name still retrieves it through a kept token. High-DF
-    tokens ("AL", "MOHAMMED", …) are the dropped token of most names
-    containing them, so the worst posting lists shrink by orders of
-    magnitude. The two pair classes with possibly no kept hit —
-    single-token probes (any hit matches) and a probe token duplicated
-    ≥2× equal to the dropped token (n_hits ≥ 2 from it alone) — are
-    rescued by also joining those probe tokens against the dropped
-    rows; both classes match unconditionally (see match_captions).
-
-    Building this in driver Python instead of a Spark plan trades ~8
-    tiny dimension jobs (DF groupBy, two windows, three broadcasts) for
-    the snapshot's one collect — measurable fixed latency on the 600 k
-    hot path, and byte-identical index content. Returns (index_rows,
-    meta_rows, df_arr): index_rows = (token, rank, nsize, keep, dropped_token,
-    name_token_set) with nsize the RAW token count (min-size rule
-    counts duplicates, Sanctions.pm:430), meta_rows = (rank, source,
-    name), and df_arr a ``_DF_SLOTS``-long int list holding
-    ``df_eff(t) = df_arr[crc32(t) % _DF_SLOTS]`` (max over slot
-    collisions) — the probe side needs the SAME global
-    (df_eff, token) order to apply its own prefix drop, and an O(1)
-    ``element_at`` on the array literal is what makes the probe-side
-    lookup affordable (see match_captions). The per-name drop below
-    uses df_eff, not raw DF, for exactly that shared-order reason; a
-    collision can only make a name drop a slightly-less-common token.
-    """
-    rows = [r for r in rows if r["name_tokens"]]
-    rows.sort(key=lambda r: (r["source"], r["name"], r["entry_id"]))
-    tok_sets = [sorted(set(r["name_tokens"])) for r in rows]
-    df_counts: dict[str, int] = {}
-    for ts in tok_sets:
-        for t in ts:
-            df_counts[t] = df_counts.get(t, 0) + 1
-    df_arr = [0] * _DF_SLOTS
-    for t, n in df_counts.items():
-        slot = zlib.crc32(t.encode()) % _DF_SLOTS
-        if n > df_arr[slot]:
-            df_arr[slot] = n
-
-    def df_eff(t: str) -> int:
-        return df_arr[zlib.crc32(t.encode()) % _DF_SLOTS]
-
-    index_rows: list[tuple] = []
-    meta_rows: list[tuple] = []
-    for rank, (r, ts) in enumerate(zip(rows, tok_sets), start=1):
-        meta_rows.append((rank, r["source"], r["name"]))
-        dropped = (
-            max(ts, key=lambda t: (df_eff(t), t)) if len(ts) >= 2 else None
-        )
-        nsize = len(r["name_tokens"])
-        for t in ts:
-            index_rows.append((t, rank, nsize, t != dropped, dropped, ts))
-    return index_rows, meta_rows, df_arr
-
-
 def match_captions(
     images: DataFrame,
     entries: DataFrame,
@@ -541,7 +579,7 @@ def match_captions(
     1. Prefix filter on BOTH sides (ppjoin-style, one global
        (df_eff, token) order shared via the index's df_arr): the name
        side drops its max-order token from the kept postings
-       (:func:`_caption_index`), and each multi-token probe
+       (:class:`NameIndex`), and each multi-token probe
        drops ITS max-order token (``__pdrop``) from candidate
        generation. For an overlap-≥2 match the smallest common token
        under the global order provably survives in both prefixes (it
@@ -582,7 +620,7 @@ def match_captions(
     ~2^-64 event per file pair, documented as accepted.
     """
     spark = images.sparkSession
-    index_rows, meta_rows, df_arr = DimSnapshot.of(entries).caption_index()
+    names = DimSnapshot.of(entries).index()
     # ship the driver-built index as Arrow columns, not pickled rows:
     # the pickled-row path serialized row by row and was the fulldim
     # outlier source (74k index rows: 2.3-9.7 s PER CALL in the round-6
@@ -590,13 +628,14 @@ def match_captions(
     index = F.broadcast(
         local_frame(
             spark,
-            index_rows,
+            names.index_rows(),
             "__itoken string, __rank int, __nsize int, __keep boolean, "
             "__dropped string, __ntokens array<string>",
         )
     )
     rank_map = F.broadcast(
-        local_frame(spark, meta_rows, "__rank int, source string, name string")
+        local_frame(spark, [(rank, *m) for rank, m in enumerate(names.meta)],
+                    "__rank int, source string, name string")
     )
 
     # per-PHYSICAL-row key: grouping on image_id would silently merge
@@ -612,7 +651,7 @@ def match_captions(
     # token per row: measured 14-16 s at 600 k rows × fulldim blob vs
     # 0.78 s for a lookup-free argmax. Slot collisions only perturb
     # WHICH token each side drops, never correctness: the index side
-    # (driver Python, _caption_index) uses the same slotted
+    # (driver Python, NameIndex) uses the same slotted
     # df_eff, so both sides share one exact global (df_eff, token)
     # order. Unknown tokens read whatever their slot holds — harmless,
     # the proof needs only a shared total order.
@@ -626,7 +665,7 @@ def match_captions(
     # collapses split(lit)+cast to the identical folded array literal
     # before codegen, so the per-row lookup stays O(1).
     df_arr_lit = F.split(
-        F.lit(",".join(map(str, df_arr))), ","
+        F.lit(",".join(map(str, names.df_arr))), ","
     ).cast("array<int>")
     pdrop = F.array_max(
         F.transform(

@@ -52,13 +52,16 @@ DRIFT_CHECKS = {"drift_w": ("w", "ks"), "drift_h": ("h", "ks"),
 CAPTION_KEY_RE = r" in (\p{L}+)$"
 
 # "auto" match-strategy budget: max sanction-dimension ENTRY rows for
-# which the worker-local Arrow index (sparkContext.broadcast dict,
-# matcher_arrow._MatcherIndex) is used. Sized from memory, not speed:
-# ~500k entries × ~3 aliases × ~100 B ≈ 150 MB per Python worker —
-# the outer edge of a sane per-worker broadcast. The reference ships
-# 15,664 entries (share/sanctions.yml), 30× inside the budget; its own
-# design makes the same bet (the whole dataset is an in-process hash,
-# Sanctions.pm:253-315 — there is no out-of-core path to mirror).
+# which the Arrow path (the snapshot's matcher.NameIndex, broadcast to
+# every Python worker) is used. Sized from memory, not speed: on the
+# 15,664-entry synthetic snapshot (15,666 name rows) the pickled index
+# is 0.82 MB (~52 B per name row) and ~4.8 MB once unpickled (~300 B),
+# so ~500k entries × ~3 aliases is a ~80 MB broadcast and ~450 MB per
+# Python worker — the outer edge of a sane per-worker broadcast. The
+# reference ships 15,664 entries (share/sanctions.yml), 30× inside the
+# budget; its own design makes the same bet (the whole dataset is an
+# in-process hash, Sanctions.pm:253-315 — there is no out-of-core path
+# to mirror).
 AUTO_ARROW_DIM_MAX_ENTRIES = 500_000
 
 

@@ -347,7 +347,8 @@ def test_caption_match_native_and_arrow_agree(spark):
 
 def test_caption_matchers_share_one_dim_collect(spark, monkeypatch):
     """Both caption matchers, called in turn on one entries frame, read
-    the dimension through one snapshot: it is collected once."""
+    the dimension through one snapshot: it is collected once and its
+    name index is built once."""
     from perl_data_validate_sanctions_spark.operators import matcher
 
     calls: list[int] = []
@@ -357,12 +358,22 @@ def test_caption_matchers_share_one_dim_collect(spark, monkeypatch):
         calls.append(1)
         return real(*a, **k)
 
+    builds: list[int] = []
+    real_init = matcher.NameIndex.__init__
+
+    def init_spy(self, *a, **k):
+        builds.append(1)
+        real_init(self, *a, **k)
+
     monkeypatch.setattr(matcher, "build_name_dim", spy)
+    # on __init__, so the broadcast still pickles a matcher.NameIndex
+    monkeypatch.setattr(matcher.NameIndex, "__init__", init_spy)
     images = synth_images(spark, 1000, num_partitions=4)
     entries = synth_entries(spark, n_extra=20)
     outs = [sorted(m(images, entries).collect())
             for m in (match_captions, match_captions_arrow, match_captions)]
     assert len(calls) == 1
+    assert len(builds) == 1
     assert outs[0] == outs[1] == outs[2] and outs[0]
 
 
@@ -557,4 +568,13 @@ def test_caption_match_randomized_vs_bruteforce(spark):
              for k in set(got) ^ set(expect) | {k for k in got
                                                if got.get(k) != expect.get(k)}},
         )
+    # the probe screen over the same captions as first names, with no
+    # DOB and no fields: J5 reduces its verdict to J1+J2
+    probes = match_probes(
+        _probe_rows(spark, *[(cid, cap, None) for cid, cap in captions]), entries)
+    got = {
+        r["probe_id"]: (r["verdict"]["list"], r["verdict"]["matched_args"]["name"])
+        for r in probes.collect() if r["verdict"]["matched"]
+    }
+    assert got == expect, "match_probes"
     assert len(expect) > 50  # the fixture must actually exercise matches

@@ -86,11 +86,13 @@ def test_local_frame_rejects_bad_rows(spark, arrow_conf):
 
 def test_package_builds_driver_rows_only_through_local_frame():
     """``createDataFrame(list)`` plans a PythonRDD that starts Python
-    workers on every scan; driver rows go through ``local_frame``."""
+    workers on every scan; driver rows go through ``local_frame``, in the
+    package and in the driver contract beside it."""
     root = Path(pkg.__file__).parent
+    inputs = [*root.rglob("*.py"), root.parent / "__spark_entry__.py"]
     found = sorted(
-        f"{path.relative_to(root)}:{n}"
-        for path in root.rglob("*.py")
+        f"{path.relative_to(root.parent)}:{n}"
+        for path in inputs
         if path != root / "session.py"
         for n, line in enumerate(path.read_text().splitlines(), start=1)
         if re.search(r"\bcreateDataFrame\(", line)
