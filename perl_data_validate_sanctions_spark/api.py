@@ -21,11 +21,12 @@ reference builds its ``_index`` once per ``_load_data``: a
 :class:`~.operators.matcher.ProbeIndex` collects the snapshot's name
 rows and their token postings to the driver the first time a query
 needs it, and is rebuilt only when ``_load_data`` returns a different
-frame (mtime advance, ``update_data``). The probe is a local relation
-(:func:`~.session.local_frame`); :func:`~.operators.matcher.match_probes`
-looks up its candidates in the postings and evaluates the verdict over
-another local relation, which Catalyst folds on the driver, so a warm
-call submits no Spark job.
+frame from the one it was built from (mtime advance, ``update_data``).
+The probe is a local relation (:func:`~.session.local_frame`), whose
+normalisation projection Catalyst folds on the driver;
+:func:`~.operators.matcher.match_probes` looks up its candidates in the
+postings and judges them in Python, so a warm call submits no Spark
+job.
 """
 
 from __future__ import annotations
@@ -58,7 +59,6 @@ class SanctionsValidator:
         self._last_load = 0.0
         self._last_mtime = 0.0
         self._index: ProbeIndex | None = None
-        self._index_of: DataFrame | None = None
 
     # --- data lifecycle (Sanctions.pm:321-352, 52-90) ---
 
@@ -87,9 +87,8 @@ class SanctionsValidator:
         """The prepared index of the frame ``_load_data`` returns, rebuilt
         (and the previous one dropped) only when that frame changes."""
         entries = self._load_data()
-        if entries is not self._index_of:
+        if self._index is None or self._index.entries is not entries:
             self._index = ProbeIndex(entries)
-            self._index_of = entries
         return self._index
 
     # --- state persistence (the Redis.pm per-source {updated, verified,

@@ -1,5 +1,6 @@
-"""The tiered match semantics (reference §2.4 J1-J7) as one Catalyst
-query shape — no UDFs anywhere on this path.
+"""The tiered match semantics (reference §2.4 J1-J7): a screening call
+judged in plain Python on the driver, and the caption screen as one
+Catalyst query shape.
 
 Reference lifecycle being reproduced
 (/root/reference/lib/Data/Validate/Sanctions.pm:217-319):
@@ -8,13 +9,12 @@ Reference lifecycle being reproduced
    token index, union of hits (Sanctions.pm:253-258). Here:
    :class:`NameIndex` holds the postings (token → name-dimension ranks)
    on the driver, built once per snapshot and read by all three
-   matchers; each probe row carries its candidate rows into the verdict
-   expression.
-2. J2  fuzzy token-overlap (``_name_matches``, Sanctions.pm:421-437):
-   count probe tokens present in the entry name's tokens **with probe
-   multiplicity** (a duplicated probe token counts twice — reproduced
-   via ``size(filter(ptokens, t -> array_contains(ntokens, t)))``);
-   match iff count > 1, or count == 1 and min(|probe|,|entry|) == 1.
+   matchers.
+2. J2  fuzzy token-overlap (``_name_matches``, Sanctions.pm:421-437),
+   :meth:`NameIndex.matches`: count probe tokens present in the entry
+   name's tokens **with probe multiplicity** (a duplicated probe token
+   counts twice); match iff count > 1, or count == 1 and
+   min(|probe|,|entry|) == 1.
 3. J3  conjunctive optional-field filter (``_match_other_fields``,
    Sanctions.pm:144-158): for each of 7 fields, if both sides present,
    probe value must be a member of the entry array, else the candidate
@@ -26,19 +26,23 @@ Reference lifecycle being reproduced
 5. J7  verdict struct ``{matched, list, matched_args, comment}``
    (``_possible_match``, Sanctions.pm:401-410).
 
+Steps 3-5 are :func:`_cascade`, walked by :meth:`ProbeIndex.judge`; the
+probe-side normalisation (name tokens, DOB epoch and year, country
+codes) stays in Spark, one projection collected per probe table.
+
 Determinism refinement (documented, SURVEY §2.4): the reference scans
-entries in Perl hash order and returns the first hit; we evaluate all
-candidates and keep the minimum of (tier, source, name, entry_id) —
-direct-DOB tiers always beat the dob_text fallback tier, matching the
-reference's two-pass structure.
+entries in Perl hash order and returns the first hit; we walk the
+candidates in (source, name, entry_id) order and keep the least
+(tier, rank) — direct-DOB tiers always beat the dob_text fallback
+tier, matching the reference's two-pass structure.
 
 Scale shape: ``match_probes`` is driver-sized — a screening call
 (one person, as the reference answers one per call) looks up its
-candidates in the driver-held postings and evaluates the verdict over a
-local relation, which Catalyst folds on the driver: no Spark job. Bulk
-screening is ``match_captions`` / ``match_captions_arrow``, which
-shuffle only candidate-bearing rows; ``bytes`` is never selected on
-either path (column pruning keeps it out of the scan).
+candidates in the driver-held postings and judges them in Python: over
+a local probe frame, no Spark job. Bulk screening is ``match_captions``
+/ ``match_captions_arrow``, which shuffle only candidate-bearing rows;
+``bytes`` is never selected on either path (column pruning keeps it out
+of the scan).
 """
 
 from __future__ import annotations
@@ -46,7 +50,6 @@ from __future__ import annotations
 import sys
 import threading
 import zlib
-from collections.abc import Callable
 from uuid import uuid4
 
 from pyspark import Broadcast
@@ -63,13 +66,8 @@ from ..functions.normalize import (
     process_name,
     ucfirst,
 )
-from ..schema import OPTIONAL_MATCH_FIELDS
+from ..schema import OPTIONAL_MATCH_FIELDS, VERDICT_SCHEMA
 from ..session import local_frame
-
-# built lazily — Column construction needs an active session
-def _empty(t: str) -> Column:
-    return F.array().cast(f"array<{t}>")
-
 
 # slot count for the crc32-bucketed document-frequency array the
 # prefix filter shares between the driver-built index and the probe
@@ -99,92 +97,6 @@ def build_name_dim(entries: DataFrame) -> DataFrame:
         .withColumn("name_tokens", clean_name_tokens(name))
         .withColumn("name_clean_full", clean_full_name(name))
         .drop("raw_name")
-    )
-
-
-def _candidate_predicates(
-    e: Callable[[str], Column],
-    ptokens: Column,
-    pfull: Column,
-    dob_provided: Column,
-    pepoch: Column,
-    pyear: Column,
-    probe_fields: dict[str, Column],
-) -> dict[str, Column]:
-    """All per-candidate predicate columns, given probe-side expressions
-    and ``e``, which maps a name-dimension field to the candidate's
-    value."""
-    ntokens = e("name_tokens")
-
-    # J2 — multiplicity-preserving hit count
-    n_hits = F.size(F.filter(ptokens, lambda t: F.array_contains(ntokens, t)))
-    min_size = F.least(F.size(ptokens), F.size(ntokens))
-    name_ok = (n_hits > 1) | ((n_hits == 1) & (min_size == 1))
-
-    # J3 — conjunctive optional fields
-    fields_ok = F.lit(True)
-    matched_fields: dict[str, Column] = {}
-    for f in OPTIONAL_MATCH_FIELDS:
-        p_f = probe_fields[f]
-        e_f = e(f)
-        relevant = (
-            p_f.isNotNull() & (p_f != "") & e_f.isNotNull() & (F.size(e_f) > 0)
-        )
-        fields_ok = fields_ok & (~relevant | F.array_contains(e_f, p_f))
-        matched_fields[f] = F.when(relevant, p_f)
-
-    # J4/J5 — DOB tiers (epoch checked before year, Sanctions.pm:278)
-    e_epochs = F.coalesce(e("dob_epoch"), _empty("long"))
-    e_years = F.coalesce(e("dob_year"), _empty("int"))
-    e_texts = F.coalesce(e("dob_text"), _empty("string"))
-    epoch_hit = (
-        dob_provided & pepoch.isNotNull() & F.array_contains(e_epochs, pepoch)
-    )
-    year_hit = (
-        dob_provided
-        & ~epoch_hit
-        & pyear.isNotNull()
-        & F.array_contains(e_years, pyear)
-    )
-    direct = ~dob_provided | epoch_hit | year_hit
-
-    # J6 — dob_text / no-DOB-entry fallback: exact cleaned-name equality
-    has_text = F.size(e_texts) > 0
-    no_ey = (F.size(e_epochs) == 0) & (F.size(e_years) == 0)
-    deferred = (
-        dob_provided
-        & ~epoch_hit
-        & ~year_hit
-        & (has_text | no_ey)
-        & (pfull == e("name_clean_full"))
-    )
-
-    comment = F.when(
-        deferred & has_text,
-        F.concat(F.lit("dob raw text: "), F.array_join(e_texts, ", ")),
-    )
-    matched_args = F.struct(
-        e("name").alias("name"),
-        *[matched_fields[f].alias(f) for f in OPTIONAL_MATCH_FIELDS],
-        F.when(epoch_hit, pepoch).alias("dob_epoch"),
-        F.when(year_hit, pyear).alias("dob_year"),
-    )
-    return dict(
-        candidate_ok=name_ok & fields_ok & (direct | deferred),
-        tier=F.when(direct, F.lit(1)).otherwise(F.lit(2)),
-        comment=comment,
-        matched_args=matched_args,
-    )
-
-
-def _miss_verdict() -> Column:
-    from ..schema import MATCHED_ARGS_SCHEMA
-
-    return F.struct(
-        F.lit(0).alias("matched"),
-        F.lit(None).cast("string").alias("list"),
-        F.lit(None).cast(MATCHED_ARGS_SCHEMA).alias("matched_args"),
-        F.lit(None).cast("string").alias("comment"),
     )
 
 
@@ -228,7 +140,7 @@ class NameIndex:
     the postings of names of raw size 1: a probe's own dropped token
     reads only those (any shared token matches them)."""
 
-    def __init__(self, rows: list[Row]):
+    def __init__(self, rows: list[Row] | list[dict]):
         # per rank: distinct tokens (sorted), RAW token count (the
         # min-size rule counts duplicates, Sanctions.pm:430), (source,
         # name). Interned, so pickle writes each token and source once.
@@ -297,39 +209,78 @@ class NameIndex:
         for t in rescue:
             ranks.update(self.kept.get(t, ()))
             ranks.update(self.drops.get(t, ()))
-        n = len(ptokens)
         for rank in sorted(ranks):
-            ts = self.tokens[rank]
-            hits = sum(1 for t in ptokens if t in ts)  # probe multiplicity
-            if hits > 1 or (hits == 1 and min(n, self.nsize[rank]) == 1):
+            if self.matches(ptokens, rank):
                 return self.meta[rank]
         return None
 
+    def matches(self, ptokens: list[str], rank: int) -> bool:
+        """J2 (``_name_matches``, Sanctions.pm:421-437): the probe tokens
+        found in the name, counted with probe multiplicity, number more
+        than one, or exactly one when either side has one token."""
+        ts = self.tokens[rank]
+        hits = sum(1 for t in ptokens if t in ts)
+        return hits > 1 or (hits == 1 and min(len(ptokens), self.nsize[rank]) == 1)
+
+
+def _cascade(p: dict, e: dict) -> tuple[int, tuple] | None:
+    """J3-J7 for one prepared probe row ``p`` and one name row ``e``
+    that passed J2: ``(tier, verdict)``, or None when the candidate dies.
+
+    Null elements in an entry's arrays keep Spark SQL's meaning: a
+    membership test that cannot rule a value out (it is absent, but the
+    array holds a null) kills the candidate; ``dob_text`` nulls are
+    skipped in the comment, as ``array_join`` skips them."""
+    fields = []
+    for f in OPTIONAL_MATCH_FIELDS:
+        pv, ev = p["__p_" + f], e[f]
+        relevant = pv is not None and pv != "" and bool(ev)
+        if relevant and pv not in ev:
+            return None
+        fields.append(pv if relevant else None)
+    epochs, years, texts = e["dob_epoch"] or (), e["dob_year"] or (), e["dob_text"] or ()
+    pepoch, pyear, pfull = p["__pepoch"], p["__pyear"], p["__pfull"]
+    epoch = year = comment = None
+    if not p["__dob_provided"]:  # J5
+        tier = 1
+    elif pepoch is not None and pepoch in epochs:  # J4, epoch before year
+        tier, epoch = 1, pepoch
+    elif pepoch is not None and None in epochs:
+        return None
+    elif pyear is not None and pyear in years:
+        tier, year = 1, pyear
+    elif pyear is not None and None in years:
+        return None
+    elif (texts or not (epochs or years)) and pfull is not None and pfull == e["name_clean_full"]:
+        tier = 2  # J6
+        if texts:
+            comment = "dob raw text: " + ", ".join(t for t in texts if t is not None)
+    else:
+        return None
+    return tier, (1, e["source"], (e["name"], *fields, epoch, year), comment)
+
 
 class ProbeIndex:
-    """The screening index of one dimension snapshot, held on the driver.
+    """The screening index of one dimension snapshot, held on the driver
+    beside the frame it was built from.
 
     The snapshot's name-dimension rows are collected once (one job),
-    ranked and kept as tuples beside their :class:`NameIndex`, built
-    once per ``_load_data``, not per query. The driver holds one
-    snapshot's name rows (~15.7k for the full feeds). The Columns
-    :func:`match_probes` needs are built here too: probe tokens, probe
-    prep and verdict."""
+    ranked and kept beside their :class:`NameIndex`, built once per
+    ``_load_data``, not per query. The driver holds one snapshot's name
+    rows (~15.7k for the full feeds). The probe-side normalisation
+    Columns :func:`match_probes` projects are built here too."""
 
     def __init__(self, entries: DataFrame):
-        dim = build_name_dim(entries)
-        # through DDL every field and element is nullable: pyarrow will
-        # not cast a nullable field into a non-nullable nested one
-        self.cand_type = DataType.fromDDL(f"array<{dim.schema.simpleString()}>")
-        rows = _ranked(dim)
-        self.names = NameIndex(rows)
-        self.rows = [tuple(r) for r in rows]
+        self.entries = entries
+        # dicts: a Row looks a field name up by a caught TypeError
+        self.rows = [r.asDict() for r in _ranked(build_name_dim(entries))]
+        self.names = NameIndex(self.rows)
 
         full_name = process_name(
             F.col("first_name"), F.coalesce(F.col("last_name"), F.lit(""))
         )
-        self.tokens = clean_name_tokens(full_name).alias("__ptokens")
         self.prep = [
+            clean_name_tokens(full_name).alias("__ptokens"),
             clean_full_name(full_name).alias("__pfull"),
             F.col("date_of_birth").isNotNull().alias("__dob_provided"),
             date_to_epoch(F.col("date_of_birth")).alias("__pepoch"),
@@ -346,49 +297,33 @@ class ProbeIndex:
         # inlined a second time
         self.pyear = epoch_year(F.col("__pepoch")).alias("__pyear")
 
-        def ranked(c: Column) -> Column:
-            preds = _candidate_predicates(
-                lambda f: c[f],
-                F.col("__ptokens"),
-                F.col("__pfull"),
-                F.col("__dob_provided"),
-                F.col("__pepoch"),
-                F.col("__pyear"),
-                {f: F.col("__p_" + f) for f in OPTIONAL_MATCH_FIELDS},
-            )
-            verdict = F.struct(
-                F.lit(1).alias("matched"),
-                c["source"].alias("list"),
-                preds["matched_args"].alias("matched_args"),
-                preds["comment"].alias("comment"),
-            )
-            return F.when(preds["candidate_ok"], F.struct(
-                preds["tier"].alias("tier"),
-                c["source"].alias("source"),
-                c["name"].alias("name"),
-                c["entry_id"].alias("entry_id"),
-                verdict.alias("verdict"),
-            ))
+    def candidates(self, ptokens: list[str]) -> list[tuple[int, dict]]:
+        """The (rank, name row) pairs sharing a token with ``ptokens``, in
+        rank order."""
+        return [(i, self.rows[i]) for i in self.names.sharing(ptokens)]
 
-        # array_min skips the nulls of failed candidates
-        best = F.array_min(F.transform(F.col("__cands"), ranked))
-        self.verdict = F.coalesce(best.getField("verdict"), _miss_verdict()).alias(
-            "verdict"
-        )
-
-    def candidates(self, ptokens: list[str]) -> list[tuple]:
-        """The name rows sharing a token with ``ptokens``, in rank order."""
-        return [self.rows[i] for i in self.names.sharing(ptokens)]
+    def judge(self, p: Row) -> tuple:
+        """The VERDICT_SCHEMA value of one prepared probe row: the verdict
+        of its least (tier, rank) candidate, or a miss."""
+        p = p.asDict()
+        ptokens = p["__ptokens"]
+        deferred = None
+        for rank, e in self.candidates(ptokens):
+            if self.names.matches(ptokens, rank) and (hit := _cascade(p, e)):
+                if hit[0] == 1:
+                    return hit[1]
+                deferred = deferred or hit[1]
+        return deferred or (0, None, None, None)
 
 
 class DimSnapshot:
     """What the caption screen derives from one entries frame, each part
     built once, on first use: the entry count (the ``"auto"`` rule), the
-    :class:`NameIndex` (native) and its broadcast (Arrow) — as the
-    reference builds its ``_index`` once per ``_load_data``
-    (Sanctions.pm:321-352). One slot, keyed on the frame's IDENTITY:
-    :meth:`of` with another frame releases the held snapshot and
-    destroys its broadcast, so a plan built on it fails when it runs."""
+    :class:`NameIndex`, the native join's frames and the index's
+    broadcast (Arrow) — as the reference builds its ``_index`` once per
+    ``_load_data`` (Sanctions.pm:321-352). One slot, keyed on the frame's
+    IDENTITY: :meth:`of` with another frame releases the held snapshot
+    and destroys its broadcast, so a plan built on it fails when it runs."""
 
     _held: DimSnapshot | None = None
     _lock = threading.RLock()
@@ -422,6 +357,20 @@ class DimSnapshot:
             build_name_dim(self.entries)
             .select("entry_id", "source", "name", "name_tokens"))))
 
+    def join_frames(self) -> tuple[DataFrame, DataFrame]:
+        """The native join's build side and its rank → (source, name) map,
+        shipped to the JVM as Arrow columns once, not per call."""
+        def build():
+            spark, names = self.entries.sparkSession, self.index()
+            return (
+                local_frame(spark, names.index_rows(),
+                            "__itoken string, __rank int, __nsize int, __keep boolean, "
+                            "__dropped string, __ntokens array<string>"),
+                local_frame(spark, [(rank, *m) for rank, m in enumerate(names.meta)],
+                            "__rank int, source string, name string"),
+            )
+        return self._part("join_frames", build)
+
     def broadcast(self) -> tuple[Broadcast, str]:
         """The index as one broadcast, and the key a worker caches it
         under: minted here, as a worker-side Broadcast has no ``id``."""
@@ -447,22 +396,24 @@ def match_probes(
     is the entries DataFrame or a :class:`ProbeIndex` prepared from it.
 
     One verdict per probe ROW, as the reference verdicts per call. The
-    probe table must be driver-sized: its rows are collected with their
-    tokens, each gets its candidate rows from the postings, and the
-    verdict is evaluated over one local relation of (probe row, tokens,
-    candidates). Over a local probe frame (the API's one-row probe)
-    Catalyst folds both projections on the driver, so the call submits
-    no Spark job. Bulk screening belongs to :func:`match_captions`."""
+    probe table must be driver-sized: its rows are collected once through
+    the normalisation projection (which Catalyst folds on the driver over
+    a local probe frame), each is judged against its candidates in
+    Python, and the result is one local relation, so a call over the
+    API's one-row probe submits no Spark job. Bulk screening belongs to
+    :func:`match_captions`."""
     idx = entries if isinstance(entries, ProbeIndex) else ProbeIndex(entries)
-    tokenized = probes.select("*", idx.tokens)
-    rows = [(*r, idx.candidates(r["__ptokens"])) for r in tokenized.collect()]
-    schema = StructType(tokenized.schema.fields + [StructField("__cands", idx.cand_type)])
-    return (
-        local_frame(probes.sparkSession, rows, schema)
-        .select("*", *idx.prep)
-        .select("*", idx.pyear)
-        .select(*probes.columns, idx.verdict)
-    )
+    n = len(probes.columns)
+    rows = [
+        (*r[:n], idx.judge(r))
+        for r in probes.select("*", *idx.prep).select("*", idx.pyear).collect()
+    ]
+    # through DDL every nested field is nullable: pyspark rebuilds Arrow
+    # struct arrays with nullable children, then cannot cast them into
+    # VERDICT_SCHEMA's non-nullable ``matched``
+    verdict = DataType.fromDDL(VERDICT_SCHEMA.simpleString())
+    schema = StructType(probes.schema.fields + [StructField("verdict", verdict, False)])
+    return local_frame(probes.sparkSession, rows, schema)
 
 
 def _with_physical_row_key(
@@ -619,24 +570,12 @@ def match_captions(
     wide. The (hash(file), row_index) pair colliding across files is a
     ~2^-64 event per file pair, documented as accepted.
     """
-    spark = images.sparkSession
-    names = DimSnapshot.of(entries).index()
-    # ship the driver-built index as Arrow columns, not pickled rows:
-    # the pickled-row path serialized row by row and was the fulldim
-    # outlier source (74k index rows: 2.3-9.7 s PER CALL in the round-6
-    # graded runs' unattributed spread; columnar buffers take ~0.3 s)
-    index = F.broadcast(
-        local_frame(
-            spark,
-            names.index_rows(),
-            "__itoken string, __rank int, __nsize int, __keep boolean, "
-            "__dropped string, __ntokens array<string>",
-        )
-    )
-    rank_map = F.broadcast(
-        local_frame(spark, [(rank, *m) for rank, m in enumerate(names.meta)],
-                    "__rank int, source string, name string")
-    )
+    snapshot = DimSnapshot.of(entries)
+    names = snapshot.index()
+    # the index as Arrow-built local relations, not pickled rows: the
+    # pickled-row path serialized row by row (74k index rows: 2.3-9.7 s
+    # PER CALL in the round-6 graded runs); the snapshot holds the frames
+    index, rank_map = map(F.broadcast, snapshot.join_frames())
 
     # per-PHYSICAL-row key: grouping on image_id would silently merge
     # duplicate-id rows into one verdict (the round-2 native/arrow

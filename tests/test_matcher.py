@@ -237,9 +237,9 @@ def test_match_probes_one_verdict_per_row(spark):
 
 def test_local_probe_table_is_answered_on_the_driver(spark, jobs_of):
     """A local probe table against a prepared index runs no Spark job:
-    the candidates come from the driver-held postings, and Catalyst
-    folds both projections, so the executed plan is one
-    ``LocalTableScan`` of the verdicts."""
+    Catalyst folds the normalisation projection, the candidates come
+    from the driver-held postings and are judged on the driver, so the
+    executed plan is one ``LocalTableScan`` of the verdicts."""
     from perl_data_validate_sanctions_spark.schema import PROBE_SCHEMA
     from perl_data_validate_sanctions_spark.session import local_frame
 
@@ -264,9 +264,10 @@ def test_local_probe_table_is_answered_on_the_driver(spark, jobs_of):
 @pytest.mark.parametrize("fold", [True, False], ids=["folded", "task"])
 def test_verdicts_do_not_depend_on_the_evaluation_path(spark, verdicts, jobs_of, fold):
     """The golden verdicts are the same whether Catalyst folds the
-    verdict on the driver or, with ``ConvertToLocalRelation`` excluded,
-    generated code evaluates it in a task, under ANSI on and off and in
-    any session time zone."""
+    normalisation projection on the driver or, with
+    ``ConvertToLocalRelation`` excluded, generated code runs it in a
+    task (the verdict is evaluated on the driver either way), under ANSI
+    on and off and in any session time zone."""
     probes = synth_probes(spark)
     entries = synth_entries(spark, n_extra=50)
     keys = ("spark.sql.optimizer.excludedRules", "spark.sql.ansi.enabled",
@@ -300,6 +301,89 @@ def test_parquet_probe_table_gets_one_verdict_per_row(spark, verdicts, tmp_path)
     rows = match_probes(spark.read.parquet(path), synth_entries(spark, n_extra=50)).collect()
     assert len(rows) == len(verdicts)
     assert {r["probe_id"]: r["verdict"] for r in rows} == verdicts
+
+
+def test_null_elements_and_edge_probes(spark):
+    """Entries a caller passes in may hold null array elements, a null
+    alias and an alias listed twice; probes may give '' for a field or
+    the DOB, no DOB, or a DOB that misses the epoch but hits the year.
+    A membership test that cannot rule the probe value out (absent, but
+    the array holds a null) kills the candidate, as SQL's three-valued
+    ``array_contains`` did; ``dob_text`` nulls are skipped in the
+    comment. Expected verdicts were recorded from the Catalyst verdict
+    cascade this engine used before judging candidates in Python."""
+    from perl_data_validate_sanctions_spark.schema import (
+        ENTRY_SCHEMA,
+        OPTIONAL_MATCH_FIELDS,
+        PROBE_SCHEMA,
+    )
+    from perl_data_validate_sanctions_spark.session import local_frame
+
+    def entry(eid, source, names, epochs=None, years=None, texts=None, **fields):
+        return (eid, source, names, epochs, years, texts,
+                *[fields.get(f) for f in OPTIONAL_MATCH_FIELDS])
+
+    entries = local_frame(spark, [
+        entry(1, "EDGE-A", ["Null Epoch"], epochs=[None, 123], years=[1999]),
+        entry(2, "EDGE-A", ["Null Year"], epochs=[5], years=[None, 2001]),
+        entry(3, "EDGE-A", ["Text Only"], texts=[None, "circa 1980"]),
+        entry(4, "EDGE-A", [None, "Field Null", "Field Null"], residence=[None, "fr"]),
+        entry(5, "EDGE-A", ["Epoch Hit"], epochs=[_epoch(1990, 3, 3)], years=[None]),
+        entry(6, "AAA-List", ["Twin Tier"], texts=["sometime"]),
+        entry(7, "ZZZ-List", ["Twin Tier"], years=[1970]),
+    ], ENTRY_SCHEMA)
+    cols = PROBE_SCHEMA.fieldNames()
+
+    def probe(pid, first, last=None, dob=None, **fields):
+        row = dict.fromkeys(cols)
+        row.update(probe_id=pid, first_name=first, last_name=last,
+                   date_of_birth=dob, **fields)
+        return tuple(row[c] for c in cols)
+
+    probes = local_frame(spark, [
+        probe("null_epoch_year_hit", "Null", "Epoch", "1999-05-05"),
+        probe("null_epoch_no_dob", "Null", "Epoch"),
+        probe("null_epoch_epoch_hit", "Null", "Epoch", "123"),
+        probe("null_year_miss", "Null", "Year", "1999-05-05"),
+        probe("null_year_hit", "Null", "Year", "2001-02-02"),
+        probe("text_null_element", "Text", "Only", "1999-01-01"),
+        probe("text_name_not_exact", "Text", "Only Extra", "1999-01-01"),
+        probe("field_null_hit", "Field", "Null", residence="France"),
+        probe("field_null_unknown", "Field", "Null", residence="Germany"),
+        probe("field_empty_string", "Field", "Null", residence="", passport_no=""),
+        probe("dob_empty_string", "Field", "Null", ""),
+        probe("dob_unparseable", "Null", "Epoch", "not a date"),
+        probe("epoch_hit_null_year", "Epoch", "Hit", "1990-03-03"),
+        probe("epoch_miss_null_year", "Epoch", "Hit", "1990-03-04"),
+        probe("direct_beats_text_tier", "Twin", "Tier", "1970-01-01"),
+        probe("text_tier_only", "Twin", "Tier", "1971-01-01"),
+        probe("no_name", None, None, "1999-01-01"),
+    ], PROBE_SCHEMA)
+    got = {
+        r["probe_id"]: (r["verdict"]["matched"], r["verdict"]["list"],
+                        _args(r["verdict"]), r["verdict"]["comment"])
+        for r in match_probes(probes, entries).collect()
+    }
+    miss = (0, None, None, None)
+    assert got == {
+        "null_epoch_year_hit": miss,
+        "null_epoch_no_dob": (1, "EDGE-A", {"name": "Null Epoch"}, None),
+        "null_epoch_epoch_hit": (1, "EDGE-A", {"name": "Null Epoch", "dob_epoch": 123}, None),
+        "null_year_miss": miss,
+        "null_year_hit": (1, "EDGE-A", {"name": "Null Year", "dob_year": 2001}, None),
+        "text_null_element": (1, "EDGE-A", {"name": "Text Only"}, "dob raw text: circa 1980"),
+        "text_name_not_exact": miss,
+        "field_null_hit": (1, "EDGE-A", {"name": "Field Null", "residence": "fr"}, None),
+        "field_null_unknown": miss,
+        "field_empty_string": (1, "EDGE-A", {"name": "Field Null"}, None),
+        "dob_empty_string": (1, "EDGE-A", {"name": "Field Null"}, None),
+        "dob_unparseable": miss,
+        "epoch_hit_null_year": (1, "EDGE-A", {"name": "Epoch Hit", "dob_epoch": 636422400}, None),
+        "epoch_miss_null_year": miss,
+        "direct_beats_text_tier": (1, "ZZZ-List", {"name": "Twin Tier", "dob_year": 1970}, None),
+        "text_tier_only": (1, "AAA-List", {"name": "Twin Tier"}, "dob raw text: sometime"),
+        "no_name": miss,
+    }
 
 
 def test_hot_token_probe(spark):
@@ -347,8 +431,9 @@ def test_caption_match_native_and_arrow_agree(spark):
 
 def test_caption_matchers_share_one_dim_collect(spark, monkeypatch):
     """Both caption matchers, called in turn on one entries frame, read
-    the dimension through one snapshot: it is collected once and its
-    name index is built once."""
+    the dimension through one snapshot: it is collected once, its name
+    index is built once, and the native join's two frames are built once
+    for both native calls."""
     from perl_data_validate_sanctions_spark.operators import matcher
 
     calls: list[int] = []
@@ -365,15 +450,24 @@ def test_caption_matchers_share_one_dim_collect(spark, monkeypatch):
         builds.append(1)
         real_init(self, *a, **k)
 
+    frames: list[int] = []
+    real_frame = matcher.local_frame
+
+    def frame_spy(*a, **k):
+        frames.append(1)
+        return real_frame(*a, **k)
+
     monkeypatch.setattr(matcher, "build_name_dim", spy)
     # on __init__, so the broadcast still pickles a matcher.NameIndex
     monkeypatch.setattr(matcher.NameIndex, "__init__", init_spy)
+    monkeypatch.setattr(matcher, "local_frame", frame_spy)
     images = synth_images(spark, 1000, num_partitions=4)
     entries = synth_entries(spark, n_extra=20)
     outs = [sorted(m(images, entries).collect())
             for m in (match_captions, match_captions_arrow, match_captions)]
     assert len(calls) == 1
     assert len(builds) == 1
+    assert len(frames) == 2  # the build side and the rank map
     assert outs[0] == outs[1] == outs[2] and outs[0]
 
 
