@@ -17,16 +17,16 @@ mirroring the reference's throttled ``_load_data`` (Sanctions.pm:29,
 321-352): reload only when the snapshot path mtime advances.
 
 The screening index is prepared once per loaded snapshot, as the
-reference builds its ``_index`` once per ``_load_data``: a
-:class:`~.operators.matcher.ProbeIndex` collects the snapshot's name
-rows and their token postings to the driver the first time a query
-needs it, and is rebuilt only when ``_load_data`` returns a different
-frame from the one it was built from (mtime advance, ``update_data``).
-The probe is a local relation (:func:`~.session.local_frame`), whose
-normalisation projection Catalyst folds on the driver;
-:func:`~.operators.matcher.match_probes` looks up its candidates in the
-postings and judges them in Python, so a warm call submits no Spark
-job.
+reference builds its ``_index`` once per ``_load_data``: the API holds
+the :class:`~.operators.matcher.DimSnapshot` of the frame ``_load_data``
+returns, the one the caption matchers read for that frame. Its name
+rows and postings are collected to the driver when a query first needs
+them, and the API takes another only when the frame changes (mtime
+advance, ``update_data``); a runner on another frame releases only the
+broadcast. The probe is a local relation (:func:`~.session.local_frame`)
+whose normalisation projection Catalyst folds on the driver;
+:func:`~.operators.matcher.match_probes` judges its candidates in
+Python, so a warm call submits no Spark job.
 """
 
 from __future__ import annotations
@@ -37,7 +37,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .operators.matcher import ProbeIndex, match_probes
+from .operators.matcher import DimSnapshot, match_probes
 from .schema import ENTRY_SCHEMA, PROBE_SCHEMA
 from .session import local_frame
 from .sources.synth import synth_entries
@@ -58,7 +58,7 @@ class SanctionsValidator:
         self._state: DataFrame | None = None
         self._last_load = 0.0
         self._last_mtime = 0.0
-        self._index: ProbeIndex | None = None
+        self._index: DimSnapshot | None = None
 
     # --- data lifecycle (Sanctions.pm:321-352, 52-90) ---
 
@@ -83,12 +83,12 @@ class SanctionsValidator:
     def data(self) -> DataFrame:
         return self._load_data()
 
-    def _probe_index(self) -> ProbeIndex:
-        """The prepared index of the frame ``_load_data`` returns, rebuilt
-        (and the previous one dropped) only when that frame changes."""
+    def _probe_index(self) -> DimSnapshot:
+        """The snapshot of the frame ``_load_data`` returns, replaced (and
+        the previous one dropped) only when that frame changes."""
         entries = self._load_data()
         if self._index is None or self._index.entries is not entries:
-            self._index = ProbeIndex(entries)
+            self._index = DimSnapshot.of(entries)
         return self._index
 
     # --- state persistence (the Redis.pm per-source {updated, verified,

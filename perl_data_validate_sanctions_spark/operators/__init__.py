@@ -3,7 +3,7 @@ variants) plus the training-data-pipeline operators (dedup, similarity
 search, text analysis)."""
 
 from .matcher import (  # noqa: F401
-    ProbeIndex,
+    DimSnapshot,
     build_name_dim,
     match_captions,
     match_probes,

@@ -8,8 +8,8 @@ Reference lifecycle being reproduced
 1. J1  candidate retrieval: probe name tokens looked up in an inverted
    token index, union of hits (Sanctions.pm:253-258). Here:
    :class:`NameIndex` holds the postings (token → name-dimension ranks)
-   on the driver, built once per snapshot and read by all three
-   matchers.
+   on the driver, built once per entries frame by its
+   :class:`DimSnapshot` and read by all three matchers.
 2. J2  fuzzy token-overlap (``_name_matches``, Sanctions.pm:421-437),
    :meth:`NameIndex.matches`: count probe tokens present in the entry
    name's tokens **with probe multiplicity** (a duplicated probe token
@@ -26,8 +26,8 @@ Reference lifecycle being reproduced
 5. J7  verdict struct ``{matched, list, matched_args, comment}``
    (``_possible_match``, Sanctions.pm:401-410).
 
-Steps 3-5 are :func:`_cascade`, walked by :meth:`ProbeIndex.judge`; the
-probe-side normalisation (name tokens, DOB epoch and year, country
+Steps 3-5 are :func:`_cascade`, walked by :meth:`DimSnapshot.judge`;
+the probe-side normalisation (name tokens, DOB epoch and year, country
 codes) stays in Spark, one projection collected per probe table.
 
 Determinism refinement (documented, SURVEY §2.4): the reference scans
@@ -260,77 +260,24 @@ def _cascade(p: dict, e: dict) -> tuple[int, tuple] | None:
     return tier, (1, e["source"], (e["name"], *fields, epoch, year), comment)
 
 
-class ProbeIndex:
-    """The screening index of one dimension snapshot, held on the driver
-    beside the frame it was built from.
-
-    The snapshot's name-dimension rows are collected once (one job),
-    ranked and kept beside their :class:`NameIndex`, built once per
-    ``_load_data``, not per query. The driver holds one snapshot's name
-    rows (~15.7k for the full feeds). The probe-side normalisation
-    Columns :func:`match_probes` projects are built here too."""
-
-    def __init__(self, entries: DataFrame):
-        self.entries = entries
-        # dicts: a Row looks a field name up by a caught TypeError
-        self.rows = [r.asDict() for r in _ranked(build_name_dim(entries))]
-        self.names = NameIndex(self.rows)
-
-        full_name = process_name(
-            F.col("first_name"), F.coalesce(F.col("last_name"), F.lit(""))
-        )
-        self.prep = [
-            clean_name_tokens(full_name).alias("__ptokens"),
-            clean_full_name(full_name).alias("__pfull"),
-            F.col("date_of_birth").isNotNull().alias("__dob_provided"),
-            date_to_epoch(F.col("date_of_birth")).alias("__pepoch"),
-        ]
-        # probe-side country normalization (Sanctions.pm:235-240):
-        # unknown countries become '' which the field check then ignores
-        # (falsy in Perl) — NOT a mismatch.
-        for f in OPTIONAL_MATCH_FIELDS:
-            p_f = F.col(f)
-            if f in ("place_of_birth", "residence", "nationality", "citizen"):
-                p_f = F.when(p_f.isNotNull() & (p_f != ""), country_code(p_f))
-            self.prep.append(p_f.alias("__p_" + f))
-        # a projection of its own, so the date_to_epoch tree is not
-        # inlined a second time
-        self.pyear = epoch_year(F.col("__pepoch")).alias("__pyear")
-
-    def candidates(self, ptokens: list[str]) -> list[tuple[int, dict]]:
-        """The (rank, name row) pairs sharing a token with ``ptokens``, in
-        rank order."""
-        return [(i, self.rows[i]) for i in self.names.sharing(ptokens)]
-
-    def judge(self, p: Row) -> tuple:
-        """The VERDICT_SCHEMA value of one prepared probe row: the verdict
-        of its least (tier, rank) candidate, or a miss."""
-        p = p.asDict()
-        ptokens = p["__ptokens"]
-        deferred = None
-        for rank, e in self.candidates(ptokens):
-            if self.names.matches(ptokens, rank) and (hit := _cascade(p, e)):
-                if hit[0] == 1:
-                    return hit[1]
-                deferred = deferred or hit[1]
-        return deferred or (0, None, None, None)
-
-
 class DimSnapshot:
-    """What the caption screen derives from one entries frame, each part
-    built once, on first use: the entry count (the ``"auto"`` rule), the
-    :class:`NameIndex`, the native join's frames and the index's
-    broadcast (Arrow) — as the reference builds its ``_index`` once per
-    ``_load_data`` (Sanctions.pm:321-352). One slot, keyed on the frame's
-    IDENTITY: :meth:`of` with another frame releases the held snapshot
-    and destroys its broadcast, so a plan built on it fails when it runs."""
+    """Everything derived from one entries frame, each part built once, on
+    first use, as the reference builds its ``_index`` once per
+    ``_load_data`` (Sanctions.pm:321-352): the ranked name rows (the one
+    collect), their :class:`NameIndex`, the probe screen's normalisation
+    Columns, the entry count (the ``"auto"`` rule), the native join's
+    frames and the index's broadcast (Arrow). The screening API and both
+    caption matchers read it. One slot, keyed on the frame's IDENTITY:
+    :meth:`of` with another frame releases the held snapshot, which
+    destroys its broadcast (a plan built on it fails when it runs) and
+    nothing else: a holder (the API) still reads its driver-side parts."""
 
     _held: DimSnapshot | None = None
     _lock = threading.RLock()
 
     def __init__(self, entries: DataFrame):
         self.entries = entries
-        self._parts: dict[str, object] | None = {}
+        self._parts: dict[str, object] = {}
 
     @classmethod
     def of(cls, entries: DataFrame) -> DimSnapshot:
@@ -343,19 +290,64 @@ class DimSnapshot:
 
     def _part(self, name: str, build):
         with self._lock:
-            if self._parts is None:
-                raise RuntimeError("DimSnapshot released: another entries frame replaced it")
             if name not in self._parts:
                 self._parts[name] = build()
             return self._parts[name]
+
+    def rows(self) -> list[dict]:
+        # dicts: a Row looks a field name up by a caught TypeError
+        return self._part("rows", lambda: [
+            r.asDict() for r in _ranked(build_name_dim(self.entries))])
 
     def count(self) -> int:
         return self._part("count", self.entries.count)
 
     def index(self) -> NameIndex:
-        return self._part("index", lambda: NameIndex(_ranked(
-            build_name_dim(self.entries)
-            .select("entry_id", "source", "name", "name_tokens"))))
+        return self._part("index", lambda: NameIndex(self.rows()))
+
+    def prep(self) -> tuple[list[Column], Column]:
+        """The probe normalisation Columns :func:`match_probes` projects,
+        and ``__pyear``: projected after them, so the date_to_epoch tree
+        is not inlined a second time."""
+        def build():
+            full_name = process_name(
+                F.col("first_name"), F.coalesce(F.col("last_name"), F.lit(""))
+            )
+            cols = [
+                clean_name_tokens(full_name).alias("__ptokens"),
+                clean_full_name(full_name).alias("__pfull"),
+                F.col("date_of_birth").isNotNull().alias("__dob_provided"),
+                date_to_epoch(F.col("date_of_birth")).alias("__pepoch"),
+            ]
+            # probe-side country normalization (Sanctions.pm:235-240):
+            # unknown countries become '' which the field check then
+            # ignores (falsy in Perl) — NOT a mismatch.
+            for f in OPTIONAL_MATCH_FIELDS:
+                p_f = F.col(f)
+                if f in ("place_of_birth", "residence", "nationality", "citizen"):
+                    p_f = F.when(p_f.isNotNull() & (p_f != ""), country_code(p_f))
+                cols.append(p_f.alias("__p_" + f))
+            return cols, epoch_year(F.col("__pepoch")).alias("__pyear")
+        return self._part("prep", build)
+
+    def candidates(self, ptokens: list[str]) -> list[tuple[int, dict]]:
+        """The (rank, name row) pairs sharing a token with ``ptokens``, in
+        rank order."""
+        rows = self.rows()
+        return [(i, rows[i]) for i in self.index().sharing(ptokens)]
+
+    def judge(self, p: Row) -> tuple:
+        """The VERDICT_SCHEMA value of one prepared probe row: the verdict
+        of its least (tier, rank) candidate, or a miss."""
+        p = p.asDict()
+        ptokens, names = p["__ptokens"], self.index()
+        deferred = None
+        for rank, e in self.candidates(ptokens):
+            if names.matches(ptokens, rank) and (hit := _cascade(p, e)):
+                if hit[0] == 1:
+                    return hit[1]
+                deferred = deferred or hit[1]
+        return deferred or (0, None, None, None)
 
     def join_frames(self) -> tuple[DataFrame, DataFrame]:
         """The native join's build side and its rank → (source, name) map,
@@ -374,14 +366,16 @@ class DimSnapshot:
     def broadcast(self) -> tuple[Broadcast, str]:
         """The index as one broadcast, and the key a worker caches it
         under: minted here, as a worker-side Broadcast has no ``id``."""
-        return self._part("broadcast", lambda: (
-            self.entries.sparkSession.sparkContext.broadcast(self.index()),
-            uuid4().hex))
+        with self._lock:
+            if DimSnapshot._held is not self:
+                raise RuntimeError("DimSnapshot released: another entries frame replaced it")
+            return self._part("broadcast", lambda: (
+                self.entries.sparkSession.sparkContext.broadcast(self.index()),
+                uuid4().hex))
 
     def release(self) -> None:
         with self._lock:
-            parts, self._parts = self._parts or {}, None
-        bc = parts.get("broadcast")
+            bc = self._parts.pop("broadcast", None)
         # a stopped context already dropped its broadcasts and temp dir
         if bc is not None and bc[0]._sc._jsc is not None:
             bc[0].destroy()
@@ -389,11 +383,12 @@ class DimSnapshot:
 
 def match_probes(
     probes: DataFrame,
-    entries: DataFrame | ProbeIndex,
+    entries: DataFrame | DimSnapshot,
 ) -> DataFrame:
     """Full ``get_sanctioned_info`` over a probe table: returns the probe
     table plus a ``verdict`` struct column (VERDICT_SCHEMA). ``entries``
-    is the entries DataFrame or a :class:`ProbeIndex` prepared from it.
+    is the entries DataFrame, read through ``DimSnapshot.of``, or a
+    :class:`DimSnapshot` of it.
 
     One verdict per probe ROW, as the reference verdicts per call. The
     probe table must be driver-sized: its rows are collected once through
@@ -402,11 +397,12 @@ def match_probes(
     Python, and the result is one local relation, so a call over the
     API's one-row probe submits no Spark job. Bulk screening belongs to
     :func:`match_captions`."""
-    idx = entries if isinstance(entries, ProbeIndex) else ProbeIndex(entries)
+    snap = entries if isinstance(entries, DimSnapshot) else DimSnapshot.of(entries)
+    cols, pyear = snap.prep()
     n = len(probes.columns)
     rows = [
-        (*r[:n], idx.judge(r))
-        for r in probes.select("*", *idx.prep).select("*", idx.pyear).collect()
+        (*r[:n], snap.judge(r))
+        for r in probes.select("*", *cols).select("*", pyear).collect()
     ]
     # through DDL every nested field is nullable: pyspark rebuilds Arrow
     # struct arrays with nullable children, then cannot cast them into

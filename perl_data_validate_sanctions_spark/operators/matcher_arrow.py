@@ -78,8 +78,9 @@ def match_captions_arrow(
     """Same contract as matcher.match_captions, zero-shuffle Arrow path.
 
     The dimension rides the broadcast of ``DimSnapshot.of(entries)``, one
-    per entries frame. A call of either caption matcher with another
-    frame destroys it, and this plan then fails when run: run it first."""
+    per entries frame. ``DimSnapshot.of`` with another frame releases the
+    snapshot, which destroys only that broadcast, and this plan then
+    fails when run: run it first."""
     bc, key = DimSnapshot.of(entries).broadcast()
     id_type = images.schema[id_col].dataType.simpleString()
     out_schema = f"{id_col} {id_type}, list string, matched_name string"

@@ -123,6 +123,52 @@ def test_new_snapshot_invalidates_cached_index(spark, tmp_path_factory):
     assert_replaced(old)
 
 
+def test_screening_and_validation_share_one_snapshot(spark, monkeypatch):
+    """A process that screens and validates one entries frame collects
+    its name rows once and builds one name index, on either caption
+    path. A run over another frame takes the process-wide slot, but the
+    validator keeps its own snapshot: its next call collects nothing and
+    gives the same verdict."""
+    from perl_data_validate_sanctions_spark.operators import matcher
+    from perl_data_validate_sanctions_spark.plans.runner import run_validation
+    from perl_data_validate_sanctions_spark.sources.synth import synth_images
+
+    dims: list[int] = []
+    builds: list[int] = []
+    real_dim, real_init = matcher.build_name_dim, matcher.NameIndex.__init__
+
+    def dim_spy(*a, **k):
+        dims.append(1)
+        return real_dim(*a, **k)
+
+    def init_spy(self, *a, **k):
+        builds.append(1)
+        real_init(self, *a, **k)
+
+    monkeypatch.setattr(matcher, "build_name_dim", dim_spy)
+    # on __init__, so the broadcast still pickles a matcher.NameIndex
+    monkeypatch.setattr(matcher.NameIndex, "__init__", init_spy)
+    images = synth_images(spark, 500, num_partitions=2)
+
+    def flagged(entries, strategy):
+        report = run_validation(images, entries=entries, checks=("sanctioned",),
+                                with_stats=False, match_strategy=strategy)
+        out = sorted(report.violations.collect())
+        report.release()
+        return out
+
+    v = SanctionsValidator(spark, entries=synth_entries(spark, n_extra=12))
+    hit = v.get_sanctioned_info("Zaki", "Ahmad", "1999-01-05")
+    assert hit["list"] == "EU-Sanctions"
+    assert flagged(v.data(), "arrow") == flagged(v.data(), "native")
+    assert (len(dims), len(builds)) == (1, 1)
+
+    assert flagged(synth_entries(spark, n_extra=13), "arrow")
+    assert len(dims) == 2
+    assert v.get_sanctioned_info("Zaki", "Ahmad", "1999-01-05") == hit
+    assert len(dims) == 2
+
+
 def test_last_updated_roundtrip_and_source_status(spark, tmp_path_factory):
     """Sanctions.pm:92-102: last_updated is max(updated) across sources
     (or the named source's); the stamped publish epoch must round-trip

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from perl_data_validate_sanctions_spark.operators.matcher import (
-    ProbeIndex,
+    DimSnapshot,
     match_captions,
     match_probes,
 )
@@ -243,7 +243,7 @@ def test_local_probe_table_is_answered_on_the_driver(spark, jobs_of):
     from perl_data_validate_sanctions_spark.schema import PROBE_SCHEMA
     from perl_data_validate_sanctions_spark.session import local_frame
 
-    index = ProbeIndex(synth_entries(spark, n_extra=0))
+    index = DimSnapshot.of(synth_entries(spark, n_extra=0))
     cols = PROBE_SCHEMA.fieldNames()
     probes = local_frame(spark, [
         tuple({"probe_id": pid, "first_name": first, "last_name": last}.get(c)
@@ -251,6 +251,7 @@ def test_local_probe_table_is_answered_on_the_driver(spark, jobs_of):
         for pid, first, last in (("a", "Bandit", "Outlaw"), ("b", "Nora", "Quinn"),
                                  ("c", "Hamza", None))
     ], PROBE_SCHEMA)
+    index.index()
     out, jobs = jobs_of(lambda: match_probes(probes, index))
     rows, more_jobs = jobs_of(out.collect)
     assert jobs == more_jobs == 0
@@ -392,7 +393,7 @@ def test_hot_token_probe(spark):
     Genersson" probe has the whole generated dimension as candidates
     and matches the least (source, name) among the Nora rows."""
     n_extra = 2000
-    index = ProbeIndex(synth_entries(spark, n_extra=n_extra))
+    index = DimSnapshot.of(synth_entries(spark, n_extra=n_extra))
     assert len(index.candidates(["NORA", "GENERSSON"])) == n_extra
     (row,) = match_probes(_probe_rows(spark, ("hot", "Nora", "Genersson")), index).collect()
     v = row["verdict"]
